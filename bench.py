@@ -43,9 +43,16 @@ def _make_prober():
     """Persistent process pool -> probe() measuring one 8-way spin. Returns
     a no-op prober on any failure: telemetry must never break the bench."""
     try:
+        import atexit
         import multiprocessing as mp
 
         pool = mp.get_context("fork").Pool(PROBE_WORKERS)
+
+        def close_pool() -> None:
+            pool.terminate()
+            pool.join()
+
+        atexit.register(close_pool)
 
         def probe() -> float:
             t0 = time.perf_counter()

@@ -5,10 +5,11 @@ ExtractHiveDDL.java:25,29).
 
     python -m hive_ddl_extract_tool_spark.catalog DB_PATTERN TABLE_PATTERN OUT.sql
 
-Env (reference-compatible names):
+Env (the first three keep the reference's names):
     USE_ADD_SQL=true|false   force ADD PARTITION over MSCK (default false)
     USE_CONTEXT=true|false   USE db + unqualified names + relative paths (default true)
     BEELINE_MARKERS=true     emit `!sh echo` progress lines (default false)
+    ENABLE_HIVE=true         back the session with a Hive metastore (default false: in-memory catalog)
 """
 
 from __future__ import annotations

@@ -23,17 +23,18 @@ Reference parity notes (each function cites the behavior it re-expresses):
 - partition spec formatting k='v',k2='v2'  ExtractHiveDDL.java:263-276
 - USE_ADD_SQL / USE_CONTEXT config ....... ExtractHiveDDL.java:25,29,79-83
 - beeline !sh echo progress markers ...... ExtractHiveDDL.java:129,133
+- per-table fan-out (R21) ................ serial: a session's catalog calls
+  all pass through HiveExternalCatalog.withClient, which is synchronized,
+  so the reference's 8-worker pool (ExtractHiveDDL.java:109) would only
+  queue on its lock.
 - 32767-partition cap .................... removed (was :199,207); Spark's
   SHOW PARTITIONS returns all partitions as a DataFrame.
 """
 
 from __future__ import annotations
 
-import contextlib
 import re
-import threading
-from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -43,28 +44,13 @@ DEFAULT_PARTITION_KEYWORD = "__HIVE_DEFAULT_PARTITION__"
 @dataclass
 class ExtractConfig:
     """Mirrors the reference's env-var config (ExtractHiveDDL.java:25,29) as
-    explicit options; `from_spark_conf` reads the session-conf equivalents."""
+    explicit options; the CLI fills it from the same env vars."""
 
     use_add_sql: bool = False   # USE_ADD_SQL: force ADD PARTITION over MSCK
     use_context: bool = True    # USE_CONTEXT: USE db + unqualified names + relative paths
     beeline_markers: bool = False  # emit the `!sh echo ...` progress lines
-    max_workers: int = 8        # reference: ForkJoinPool parallelism=8 (extract_hive_ddl.sh:25)
     progress: bool = False      # R3: per-table "(i/total)" progress lines on stderr
     refresh_cache: bool = False  # per-db metadata refresh (reference flushCache, :112)
-
-    @classmethod
-    def from_spark_conf(cls, spark: SparkSession) -> "ExtractConfig":
-        def b(key: str, default: bool) -> bool:
-            return spark.conf.get(key, str(default).lower()).lower() == "true"
-
-        return cls(
-            use_add_sql=b("spark.hiveddl.useAddSql", False),
-            use_context=b("spark.hiveddl.useContext", True),
-            beeline_markers=b("spark.hiveddl.beelineMarkers", False),
-            max_workers=int(spark.conf.get("spark.hiveddl.maxWorkers", "8")),
-            progress=b("spark.hiveddl.progress", False),
-            refresh_cache=b("spark.hiveddl.refreshCache", False),
-        )
 
 
 class DefaultPartitionConflictError(ValueError):
@@ -195,48 +181,29 @@ def get_create_ddl(spark: SparkSession, db: str, table: str) -> str:
     return "\n".join(lines).rstrip() + ";"
 
 
-def get_partitions(
-    spark: SparkSession, db: str, table: str, max_workers: int = 8,
-    rpc_gate: "threading.Semaphore | None" = None,
-) -> list[tuple[str, str]]:
-    """R7+R8: (partition-name, location) pairs. Names come from SHOW
-    PARTITIONS (same ``k=v/k2=v2`` format the metastore returns); locations
-    from DESCRIBE ... PARTITION. Non-partitioned tables -> empty list. No
-    32767 cap (reference: Short.MAX_VALUE, ExtractHiveDDL.java:199).
+def _location(spark: SparkSession, target: str) -> str:
+    rows = spark.sql(f"DESCRIBE FORMATTED {target}").collect()
+    return next((r["data_type"] for r in rows if r["col_name"] == "Location"), "")
 
-    The location fetch is one driver->metastore RPC per partition, so it
-    runs on a thread pool (R21's machinery): at the reference's own
-    32k-partition ceiling a serial loop is 32k sequential round-trips per
-    table, which dominates extraction wall-clock; concurrent DESCRIBEs
-    overlap the RPC latency exactly like the reference's 8-thread
-    ForkJoinPool overlapped its Thrift calls. Results keep the sorted
-    SHOW PARTITIONS order regardless of completion order."""
+
+def get_partitions(spark: SparkSession, db: str, table: str) -> list[tuple[str, str]]:
+    """R7+R8: (partition-name, location) pairs in sorted name order. Names
+    come from SHOW PARTITIONS (same ``k=v/k2=v2`` format the metastore
+    returns); locations from one DESCRIBE ... PARTITION each. Non-partitioned
+    tables -> empty list. No 32767 cap (reference: Short.MAX_VALUE,
+    ExtractHiveDDL.java:199)."""
     try:
         names = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS `{db}`.`{table}`").collect())
     except Exception:
         return []  # not partitioned
-
-    def fetch_location(name: str) -> str:
-        spec = format_partition_spec(name)
-        # rpc_gate caps TOTAL in-flight DESCRIBEs across every table worker:
-        # extract_ddl's 8 table threads each opening an 8-thread pool would
-        # otherwise put max_workers^2 concurrent metastore RPCs in flight,
-        # where the reference's single ForkJoinPool never exceeded 8.
-        with rpc_gate or contextlib.nullcontext():
-            rows = spark.sql(
-                f"DESCRIBE FORMATTED `{db}`.`{table}` PARTITION ({spec})"
-            ).collect()
-        return next((r["data_type"] for r in rows if r["col_name"] == "Location"), "")
-
-    if len(names) <= 1 or max_workers <= 1:
-        return [(name, fetch_location(name)) for name in names]
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        return list(zip(names, pool.map(fetch_location, names)))
+    return [
+        (name, _location(spark, f"`{db}`.`{table}` PARTITION ({format_partition_spec(name)})"))
+        for name in names
+    ]
 
 
 def get_table_location(spark: SparkSession, db: str, table: str) -> str:
-    rows = spark.sql(f"DESCRIBE FORMATTED `{db}`.`{table}`").collect()
-    return next((r["data_type"] for r in rows if r["col_name"] == "Location"), "")
+    return _location(spark, f"`{db}`.`{table}`")
 
 
 # --------------------------------------------------------------------------
@@ -244,13 +211,10 @@ def get_table_location(spark: SparkSession, db: str, table: str) -> str:
 # --------------------------------------------------------------------------
 
 def partition_restore_sql(
-    spark: SparkSession, db: str, table: str, cfg: ExtractConfig,
-    rpc_gate: "threading.Semaphore | None" = None,
+    spark: SparkSession, db: str, table: str, cfg: ExtractConfig
 ) -> list[str]:
     """R9-R17: the partition-restore block for one table."""
-    parts = get_partitions(
-        spark, db, table, max_workers=cfg.max_workers, rpc_gate=rpc_gate
-    )
+    parts = get_partitions(spark, db, table)
     if not parts:
         return []  # R9: empty short-circuit (ExtractHiveDDL.java:200-203)
     table_path = get_table_location(spark, db, table)
@@ -272,10 +236,7 @@ def partition_restore_sql(
     ]
 
 
-def table_section(
-    spark: SparkSession, db: str, table: str, cfg: ExtractConfig,
-    rpc_gate: "threading.Semaphore | None" = None,
-) -> list[str]:
+def table_section(spark: SparkSession, db: str, table: str, cfg: ExtractConfig) -> list[str]:
     """R19: banner + optional beeline marker + CREATE + partition block
     (ExtractHiveDDL.java:118-136)."""
     lines = [
@@ -286,7 +247,7 @@ def table_section(
     if cfg.beeline_markers:
         lines.append(f'!sh echo "Creating table: {table}...";')
     lines.append(get_create_ddl(spark, db, table))
-    partition_lines = partition_restore_sql(spark, db, table, cfg, rpc_gate=rpc_gate)
+    partition_lines = partition_restore_sql(spark, db, table, cfg)
     if partition_lines:
         if cfg.beeline_markers:
             lines.append(f'!sh echo "Creating partitions for table: {table}...";')
@@ -316,10 +277,8 @@ def extract_ddl(
     """The whole pipeline (ExtractHiveDDL.java:34-74): enumerate databases,
     emit per-db header (R18: CREATE DATABASE IF NOT EXISTS + optional USE,
     :101-105 -- emitted for EVERY matched database, even table-less ones,
-    matching the reference), fetch every matching table's section
-    concurrently (catalog calls are driver-side; the reference used an
-    8-thread pool, extract_hive_ddl.sh:25), assemble in sorted order
-    (deterministic -- improves on the reference's nondeterministic
+    matching the reference), then each matching table's section in sorted
+    order (deterministic -- improves on the reference's nondeterministic
     interleaving, :109).
 
     R3 parity: with cfg.progress, matching tables are pre-counted across all
@@ -330,7 +289,7 @@ def extract_ddl(
     """
     import sys as _sys
 
-    cfg = cfg or ExtractConfig.from_spark_conf(spark)
+    cfg = cfg or ExtractConfig()
     dbs = list_databases(spark, database_pattern)
     if cfg.refresh_cache:
         for db in dbs:
@@ -345,12 +304,8 @@ def extract_ddl(
         if cfg.use_context:
             out.append(f"USE {db};")
         out.append("")
-        rpc_gate = threading.BoundedSemaphore(cfg.max_workers)
-        with ThreadPoolExecutor(max_workers=cfg.max_workers) as pool:
-            sections = pool.map(
-                lambda t: table_section(spark, db, t, cfg, rpc_gate=rpc_gate), tables
-            )
-        for table, section in zip(tables, sections):
+        for table in tables:
+            section = table_section(spark, db, table, cfg)
             done += 1
             if cfg.progress:
                 print(f"({done}/{total}) {db}.{table}", file=_sys.stderr)

@@ -67,8 +67,9 @@ def _schema_key(spark: SparkSession, path: str) -> tuple[str, str, int, int]:
         st = os.stat(path)
         mtime_ns, size = st.st_mtime_ns, st.st_size
     except OSError:
-        # directory-style parquet or exotic path: fall back to path-only
-        # keying (the r15 behavior) rather than failing the load
+        # missing path: key on the path alone and let the read raise
+        # Spark's own not-found error (os.stat succeeds on directories, so
+        # directory-style parquet keys on the directory's own mtime/size)
         mtime_ns, size = -1, -1
     return (spark.sparkContext.applicationId, path, mtime_ns, size)
 

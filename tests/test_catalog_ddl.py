@@ -136,44 +136,32 @@ def test_partition_enumeration(spark, ddl_fixtures):
     assert get_partitions(spark, "ddl_db1", "plain_t") == []
 
 
-def test_partition_location_fetch_is_concurrent(spark, ddl_fixtures):
-    """At the reference's own 32k-partition ceiling a serial DESCRIBE loop
-    is 32k sequential metastore round-trips per table, so get_partitions
-    must overlap them (R21's thread-pool machinery). Wrap spark.sql in a
-    latency shim that records in-flight DESCRIBE concurrency: the parallel
-    fetch must overlap calls (peak >= 2) while returning exactly the
-    serial result in the same sorted order."""
-    import threading
-    import time
+def test_extract_statement_budget(spark, ddl_fixtures):
+    """Per-table metastore statements, in order: SHOW CREATE (plus the plain
+    form when AS SERDE is unsupported), one SHOW PARTITIONS, one DESCRIBE
+    per partition in sorted name order, then the table DESCRIBE."""
     from unittest import mock
 
-    serial = get_partitions(spark, "ddl_db1", "part_lower", max_workers=1)
-    assert len(serial) == 3
-
-    lock = threading.Lock()
-    inflight = 0
-    peak = 0
+    issued = []
     orig = spark.sql
 
-    def slow_sql(q, *a, **k):
-        nonlocal inflight, peak
-        is_describe = q.startswith("DESCRIBE FORMATTED")
-        if is_describe:
-            with lock:
-                inflight += 1
-                peak = max(peak, inflight)
-            time.sleep(0.15)
-        try:
-            return orig(q, *a, **k)
-        finally:
-            if is_describe:
-                with lock:
-                    inflight -= 1
+    def recording_sql(q, *a, **k):
+        issued.append(q)
+        return orig(q, *a, **k)
 
-    with mock.patch.object(spark, "sql", side_effect=slow_sql):
-        parallel = get_partitions(spark, "ddl_db1", "part_lower", max_workers=8)
-    assert parallel == serial
-    assert peak >= 2, f"DESCRIBE FORMATTED calls never overlapped (peak={peak})"
+    with mock.patch.object(spark, "sql", side_effect=recording_sql):
+        extract_ddl(spark, "ddl_db1", "part_lower", None, ExtractConfig())
+    per_table = [q for q in issued if q.startswith(("SHOW CREATE", "SHOW PARTITIONS", "DESCRIBE"))]
+    t = "`ddl_db1`.`part_lower`"
+    n_create = 2 if per_table[1:2] == [f"SHOW CREATE TABLE {t}"] else 1
+    assert per_table[0] == f"SHOW CREATE TABLE {t} AS SERDE"
+    assert per_table[n_create:] == [
+        f"SHOW PARTITIONS {t}",
+        f"DESCRIBE FORMATTED {t} PARTITION (dt='2024-01-01',region='apac')",
+        f"DESCRIBE FORMATTED {t} PARTITION (dt='2024-01-01',region='emea')",
+        f"DESCRIBE FORMATTED {t} PARTITION (dt='2024-01-02',region='emea')",
+        f"DESCRIBE FORMATTED {t}",
+    ]
 
 
 def test_strategy_lower_default_msck(spark, ddl_fixtures):
@@ -386,41 +374,3 @@ def test_analyze_table_feeds_cbo_statistics(spark, sf_dir):
             spark.conf.set("spark.sql.cbo.enabled", prev)
     finally:
         spark.sql("DROP TABLE IF EXISTS stats_probe")
-
-
-def test_partition_fetch_respects_shared_rpc_gate(spark, ddl_fixtures):
-    """The rpc_gate caps TOTAL in-flight DESCRIBEs: with a budget of 1 the
-    8-thread pool must never overlap calls -- the guard against the
-    nested-pool max_workers^2 RPC storm when extract_ddl's table workers
-    each fan out partition fetches."""
-    import threading
-    import time
-    from unittest import mock
-
-    lock = threading.Lock()
-    inflight = 0
-    peak = 0
-    orig = spark.sql
-
-    def slow_sql(q, *a, **k):
-        nonlocal inflight, peak
-        is_describe = q.startswith("DESCRIBE FORMATTED")
-        if is_describe:
-            with lock:
-                inflight += 1
-                peak = max(peak, inflight)
-            time.sleep(0.05)
-        try:
-            return orig(q, *a, **k)
-        finally:
-            if is_describe:
-                with lock:
-                    inflight -= 1
-
-    gate = threading.BoundedSemaphore(1)
-    with mock.patch.object(spark, "sql", side_effect=slow_sql):
-        parts = get_partitions(
-            spark, "ddl_db1", "part_lower", max_workers=8, rpc_gate=gate
-        )
-    assert len(parts) == 3
-    assert peak == 1, f"gate of 1 still overlapped DESCRIBEs (peak={peak})"

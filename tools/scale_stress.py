@@ -231,7 +231,7 @@ def measure(spark: SparkSession, sf_dir: str, k: int) -> list[dict]:
     # q42 MinHash+LSH: candidate tier measured separately, then the full
     # verify (reuses the staged candidates, so sec_total ~ cand + verify).
     ds = dedup._doc_shingles(spark, sf_dir, cache=True)
-    n_cand, t_cand = timed_count(dedup._lsh_candidates(spark, sf_dir, ds))
+    n_cand, t_cand = timed_count(dedup._lsh_candidates(spark, sf_dir))
     n, t = timed_count(dedup.q42_minhash_lsh_dedup(spark, sf_dir))
     rows.append({"family": "q42_lsh", "k": k, "candidates": n_cand,
                  "cand_sec": t_cand, "out_rows": n, "sec": round(t_cand + t, 2)})
