@@ -6,8 +6,9 @@ HiveServer2 over Thrift and writes one .sql script that recreates matching
 tables on another cluster: CREATE DATABASE / USE / SHOW CREATE TABLE output /
 partition restore (MSCK REPAIR or ALTER TABLE ADD PARTITION). Here a single
 Hive-enabled SparkSession is both metastore client and SQL executor
-(`ExtractHiveDDL.java`'s three RPC paths collapse into `spark.sql`), metadata
-flows as DataFrames, and the script ordering is deterministic (the reference
+(`ExtractHiveDDL.java`'s three RPC paths collapse into the session:
+`spark.sql` for names and DDL text, its SessionCatalog for partitions), and
+the script ordering is deterministic (the reference
 interleaves tables nondeterministically via parallelStream on a shared
 writer, ExtractHiveDDL.java:109).
 
@@ -20,7 +21,15 @@ Reference parity notes (each function cites the behavior it re-expresses):
     * default partition => MSCK .......... :212-218,233 (README.md:39-41)
     * uppercase rel. path => ADD ......... :219-228,234 (README.md:43-45)
     * both => fatal ...................... :231-232     (README.md:47-49)
+- partition name + object scans (R7/R8) .. ExtractHiveDDL.java:199,207: one
+  SessionCatalog.getTableMetadata + one listPartitions per table (the
+  reference's listPartitionNames + listPartitions), whatever the partition
+  count; names built as SHOW PARTITIONS builds them, locations as DESCRIBE
+  prints them.
 - partition spec formatting k='v',k2='v2'  ExtractHiveDDL.java:263-276
+    * deliberate deviation: values are path-unescaped (%XX) and SQL-escaped
+      (' and \\), so dt='a:b' replays as 'a:b'; the reference quotes the
+      escaped name (a%3Ab) and so creates a different partition.
 - USE_ADD_SQL / USE_CONTEXT config ....... ExtractHiveDDL.java:25,29,79-83
 - beeline !sh echo progress markers ...... ExtractHiveDDL.java:129,133
 - per-table fan-out (R21) ................ serial: a session's catalog calls
@@ -28,13 +37,15 @@ Reference parity notes (each function cites the behavior it re-expresses):
   so the reference's 8-worker pool (ExtractHiveDDL.java:109) would only
   queue on its lock.
 - 32767-partition cap .................... removed (was :199,207); Spark's
-  SHOW PARTITIONS returns all partitions as a DataFrame.
+  listPartitions returns every partition.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass
+from types import SimpleNamespace
 
 from pyspark.sql import SparkSession
 
@@ -86,11 +97,23 @@ def strip_catalog_prefix(line: str) -> str:
     )
 
 
+_PATH_ESCAPE = re.compile(r"%([0-9A-Fa-f]{2})")
+
+
 def format_partition_spec(name: str) -> str:
     """``k1=v1/k2=v2`` -> ``k1='v1',k2='v2'`` -- every value single-quoted as
-    a string, relying on implicit casts (ExtractHiveDDL.java:264-265)."""
-    parts = name.split("/")
-    return ",".join("{}='{}'".format(*p.split("=", 1)) for p in parts)
+    a string, relying on implicit casts (ExtractHiveDDL.java:264-265).
+
+    A partition name carries its values path-escaped (``a:b`` -> ``a%3Ab``,
+    ExternalCatalogUtils.escapePathName), so each value is unescaped and
+    then SQL-escaped (``\\`` and ``'``) to replay the value itself."""
+    specs = []
+    for part in name.split("/"):
+        key, value = part.split("=", 1)
+        value = _PATH_ESCAPE.sub(lambda m: chr(int(m.group(1), 16)), value)
+        value = value.replace("\\", "\\\\").replace("'", "\\'")
+        specs.append(f"{key}='{value}'")
+    return ",".join(specs)
 
 
 def relative_location(location: str, table_path: str) -> str:
@@ -181,29 +204,67 @@ def get_create_ddl(spark: SparkSession, db: str, table: str) -> str:
     return "\n".join(lines).rstrip() + ";"
 
 
-def _location(spark: SparkSession, target: str) -> str:
-    rows = spark.sql(f"DESCRIBE FORMATTED {target}").collect()
-    return next((r["data_type"] for r in rows if r["col_name"] == "Location"), "")
+@functools.cache
+def _jvm_api(jvm) -> SimpleNamespace:
+    """The JVM classes the catalog scans call, resolved once per gateway:
+    every step of a ``jvm.a.b.C`` lookup is a py4j round trip."""
+    catalog = jvm.org.apache.spark.sql.catalyst.catalog
+    return SimpleNamespace(
+        table_identifier=jvm.org.apache.spark.sql.catalyst.TableIdentifier,
+        some=jvm.scala.Some,
+        none=jvm.scala.Option.empty(),
+        partition_path_string=catalog.ExternalCatalogUtils.getPartitionPathString,
+        uri_to_string=catalog.CatalogUtils.URIToString,
+    )
 
 
-def get_partitions(spark: SparkSession, db: str, table: str) -> list[tuple[str, str]]:
-    """R7+R8: (partition-name, location) pairs in sorted name order. Names
-    come from SHOW PARTITIONS (same ``k=v/k2=v2`` format the metastore
-    returns); locations from one DESCRIBE ... PARTITION each. Non-partitioned
-    tables -> empty list. No 32767 cap (reference: Short.MAX_VALUE,
-    ExtractHiveDDL.java:199)."""
-    try:
-        names = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS `{db}`.`{table}`").collect())
-    except Exception:
-        return []  # not partitioned
-    return [
-        (name, _location(spark, f"`{db}`.`{table}` PARTITION ({format_partition_spec(name)})"))
-        for name in names
-    ]
+def _seq(jseq) -> list:
+    """A JVM Scala Seq as a Python list."""
+    return [jseq.apply(i) for i in range(jseq.length())]
+
+
+def _table_metadata(spark: SparkSession, db: str, table: str):
+    """The table's CatalogTable from the session's SessionCatalog, which
+    serves both the in-memory and the Hive catalog: one catalog call."""
+    api = _jvm_api(spark._jvm)
+    ident = api.table_identifier(table, api.some(db))
+    return spark._jsparkSession.sessionState().catalog().getTableMetadata(ident)
+
+
+def _table_path(spark: SparkSession, meta) -> str:
+    """The table's location as DESCRIBE FORMATTED prints it ("" for a view)."""
+    uri = meta.storage().locationUri()
+    return _jvm_api(spark._jvm).uri_to_string(uri.get()) if uri.isDefined() else ""
+
+
+def get_partitions(
+    spark: SparkSession, db: str, table: str, meta=None
+) -> list[tuple[str, str]]:
+    """R7+R8: (partition-name, location) pairs in sorted name order, from
+    one listPartitions call per table (the reference's listPartitionNames +
+    listPartitions, ExtractHiveDDL.java:199,207). Names are built as SHOW
+    PARTITIONS builds them (``k=v/k2=v2``, each pair
+    ExternalCatalogUtils.getPartitionPathString); locations as DESCRIBE
+    prints them. ``meta`` is the table's CatalogTable when the caller has
+    already fetched it. A table with no partition columns -> empty list;
+    any other catalog error propagates. No 32767 cap (reference:
+    Short.MAX_VALUE, ExtractHiveDDL.java:199)."""
+    meta = _table_metadata(spark, db, table) if meta is None else meta
+    cols = _seq(meta.partitionColumnNames())
+    if not cols:
+        return []
+    api = _jvm_api(spark._jvm)
+    catalog = spark._jsparkSession.sessionState().catalog()
+    parts = []
+    for part in _seq(catalog.listPartitions(meta.identifier(), api.none)):
+        spec = part.spec()
+        name = "/".join(api.partition_path_string(c, spec.apply(c)) for c in cols)
+        parts.append((name, api.uri_to_string(part.location())))
+    return sorted(parts)
 
 
 def get_table_location(spark: SparkSession, db: str, table: str) -> str:
-    return _location(spark, f"`{db}`.`{table}`")
+    return _table_path(spark, _table_metadata(spark, db, table))
 
 
 # --------------------------------------------------------------------------
@@ -213,11 +274,13 @@ def get_table_location(spark: SparkSession, db: str, table: str) -> str:
 def partition_restore_sql(
     spark: SparkSession, db: str, table: str, cfg: ExtractConfig
 ) -> list[str]:
-    """R9-R17: the partition-restore block for one table."""
-    parts = get_partitions(spark, db, table)
+    """R9-R17: the partition-restore block for one table. The table's
+    metadata is fetched once, for both its partitions and its path."""
+    meta = _table_metadata(spark, db, table)
+    parts = get_partitions(spark, db, table, meta)
     if not parts:
         return []  # R9: empty short-circuit (ExtractHiveDDL.java:200-203)
-    table_path = get_table_location(spark, db, table)
+    table_path = _table_path(spark, meta)
     has_default = any(f"={DEFAULT_PARTITION_KEYWORD}" in name for name, _ in parts)
     rels = [relative_location(loc, table_path) for _, loc in parts]
     # Deliberate deviation from the reference: it case-checks the raw

@@ -8,7 +8,12 @@ Spark's catalog and compare the emitted script structure.
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.errors import AnalysisException
 
 from hive_ddl_extract_tool_spark.catalog.extractor import (
     DefaultPartitionConflictError,
@@ -19,6 +24,7 @@ from hive_ddl_extract_tool_spark.catalog.extractor import (
     fix_create_table,
     format_partition_spec,
     get_partitions,
+    get_table_location,
     list_databases,
     list_tables,
     msck_sql,
@@ -52,6 +58,14 @@ def test_format_partition_spec():
     assert format_partition_spec("dt=2024-01-01/region=emea") == "dt='2024-01-01',region='emea'"
     # values containing '=' keep everything after the first '='
     assert format_partition_spec("k=a=b") == "k='a=b'"
+    # names carry path-escaped values (%XX); the spec replays the value itself
+    assert format_partition_spec("dt=a%3Ab") == "dt='a:b'"
+    assert format_partition_spec("dt=a%2Fb/n=1") == "dt='a/b',n='1'"
+    assert format_partition_spec("dt=100%25") == "dt='100%'"
+    assert format_partition_spec("dt=%2541") == "dt='%41'"  # unescaped once
+    # quote and backslash are SQL-escaped inside the literal
+    assert format_partition_spec("dt=it%27s") == "dt='it\\'s'"
+    assert format_partition_spec("dt=a%5Cb") == "dt='a\\\\b'"
 
 
 def test_strategy_decision_table():
@@ -136,12 +150,82 @@ def test_partition_enumeration(spark, ddl_fixtures):
     assert get_partitions(spark, "ddl_db1", "plain_t") == []
 
 
-def test_extract_statement_budget(spark, ddl_fixtures):
-    """Per-table metastore statements, in order: SHOW CREATE (plus the plain
-    form when AS SERDE is unsupported), one SHOW PARTITIONS, one DESCRIBE
-    per partition in sorted name order, then the table DESCRIBE."""
-    from unittest import mock
+def test_partition_listing_errors_propagate(spark, ddl_fixtures):
+    """Only a table without partition columns lists as empty; a failed
+    catalog call must not turn into a table emitted without its restore."""
+    with pytest.raises(AnalysisException):
+        get_partitions(spark, "ddl_db1", "no_such_table")
+    with pytest.raises(AnalysisException):
+        partition_restore_sql(spark, "ddl_db1", "no_such_table", ExtractConfig())
 
+
+def _describe_location(spark, target: str) -> str:
+    rows = spark.sql(f"DESCRIBE FORMATTED {target}").collect()
+    return next((r["data_type"] for r in rows if r["col_name"] == "Location"), "")
+
+
+def _sql_path_partitions(spark, db: str, table: str, specs=None) -> list[tuple[str, str]]:
+    """(name, location) pairs read through SQL: SHOW PARTITIONS names, each
+    partition's DESCRIBE FORMATTED Location. ``specs`` maps a name to its
+    true PARTITION spec where format_partition_spec is not the oracle."""
+    t = f"`{db}`.`{table}`"
+    try:
+        names = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {t}").collect())
+    except AnalysisException:
+        return []  # not partitioned
+    specs = specs or {}
+    return [
+        (n, _describe_location(spark, f"{t} PARTITION ({specs.get(n) or format_partition_spec(n)})"))
+        for n in names
+    ]
+
+
+def test_bulk_listing_matches_sql_path(spark, ddl_fixtures):
+    tables = [("ddl_db1", t) for t in list_tables(spark, "ddl_db1", "*")] + [("ddl_db2", "other_t")]
+    for db, table in tables:
+        assert get_partitions(spark, db, table) == _sql_path_partitions(spark, db, table), table
+        assert get_table_location(spark, db, table) == _describe_location(spark, f"`{db}`.`{table}`")
+
+
+@pytest.fixture(scope="module")
+def escape_tables(spark):
+    spark.sql("CREATE DATABASE IF NOT EXISTS ddl_esc")
+    for t in ("src", "dst"):
+        spark.sql(f"CREATE TABLE ddl_esc.{t} (v INT, dt STRING) USING parquet PARTITIONED BY (dt)")
+    yield
+    spark.sql("DROP DATABASE ddl_esc CASCADE")
+
+
+@settings(max_examples=25, deadline=None)
+@example(value="a:b")
+@example(value="it's a \\ %41")
+@given(value=st.text(alphabet="ab:/%=' #\\\"?*[]^{", min_size=1, max_size=8))
+def test_escaped_partition_values_list_and_replay(spark, escape_tables, value):
+    """Values that need path escaping: the bulk listing agrees with SHOW
+    PARTITIONS + DESCRIBE, and the ADD PARTITION line replays the same
+    partition (a spec built from the escaped name would create a new one)."""
+    spec = "dt='{}'".format(value.replace("\\", "\\\\").replace("'", "\\'"))
+    spark.sql(f"ALTER TABLE ddl_esc.src ADD PARTITION ({spec})")
+    try:
+        parts = get_partitions(spark, "ddl_esc", "src")
+        [(name, _)] = parts
+        assert parts == _sql_path_partitions(spark, "ddl_esc", "src", {name: spec})
+        assert format_partition_spec(name) == spec
+        [add] = partition_restore_sql(spark, "ddl_esc", "src", ExtractConfig(use_add_sql=True))
+        spark.sql(add.rstrip(";").replace("ALTER TABLE src ", "ALTER TABLE ddl_esc.dst ", 1))
+        assert partition_restore_sql(spark, "ddl_esc", "dst", ExtractConfig(use_add_sql=True)) == [
+            add.replace("ALTER TABLE src ", "ALTER TABLE dst ", 1)
+        ]
+    finally:
+        for t in ("src", "dst"):
+            spark.sql(f"ALTER TABLE ddl_esc.{t} DROP IF EXISTS PARTITION ({spec})")
+
+
+def test_extract_statement_budget(spark, ddl_fixtures):
+    """Per table the only statement is SHOW CREATE TABLE ... AS SERDE (plus
+    the plain form when AS SERDE is unsupported): partitions and locations
+    come from catalog calls, so the count does not grow with the partition
+    count (part_lower has 3 partitions, part_upper 2, plain_t none)."""
     issued = []
     orig = spark.sql
 
@@ -149,19 +233,19 @@ def test_extract_statement_budget(spark, ddl_fixtures):
         issued.append(q)
         return orig(q, *a, **k)
 
-    with mock.patch.object(spark, "sql", side_effect=recording_sql):
-        extract_ddl(spark, "ddl_db1", "part_lower", None, ExtractConfig())
-    per_table = [q for q in issued if q.startswith(("SHOW CREATE", "SHOW PARTITIONS", "DESCRIBE"))]
-    t = "`ddl_db1`.`part_lower`"
-    n_create = 2 if per_table[1:2] == [f"SHOW CREATE TABLE {t}"] else 1
-    assert per_table[0] == f"SHOW CREATE TABLE {t} AS SERDE"
-    assert per_table[n_create:] == [
-        f"SHOW PARTITIONS {t}",
-        f"DESCRIBE FORMATTED {t} PARTITION (dt='2024-01-01',region='apac')",
-        f"DESCRIBE FORMATTED {t} PARTITION (dt='2024-01-01',region='emea')",
-        f"DESCRIBE FORMATTED {t} PARTITION (dt='2024-01-02',region='emea')",
-        f"DESCRIBE FORMATTED {t}",
-    ]
+    budgets = {}
+    for table in ("part_lower", "part_upper", "plain_t"):
+        issued.clear()
+        with mock.patch.object(spark, "sql", side_effect=recording_sql):
+            extract_ddl(spark, "ddl_db1", table, None, ExtractConfig())
+        per_table = [q for q in issued if not q.startswith(("SHOW DATABASES", "SHOW TABLES"))]
+        t = f"`ddl_db1`.`{table}`"
+        assert per_table in (
+            [f"SHOW CREATE TABLE {t} AS SERDE"],
+            [f"SHOW CREATE TABLE {t} AS SERDE", f"SHOW CREATE TABLE {t}"],
+        ), per_table
+        budgets[table] = len(per_table)
+    assert len(set(budgets.values())) == 1, budgets
 
 
 def test_strategy_lower_default_msck(spark, ddl_fixtures):

@@ -29,6 +29,7 @@ Usage: python tools/catalog_parity.py            # prints the one-liner
 
 from __future__ import annotations
 
+import os
 import shutil
 import subprocess
 import sys
@@ -36,7 +37,7 @@ import tempfile
 import textwrap
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def scenario_script(workdir: str) -> str:
@@ -58,13 +59,22 @@ def scenario_script(workdir: str) -> str:
         spark.sql("CREATE TABLE hv.t (a INT, dt STRING) PARTITIONED BY (dt) STORED AS PARQUET")
         spark.sql("INSERT INTO hv.t PARTITION (dt='x') VALUES (1)")
         spark.sql("INSERT INTO hv.t PARTITION (dt='y') VALUES (2)")
+        # HiveExternalCatalog's own partition-name path: an INT partition
+        # column, and values the metastore stores path-escaped (a:b ->
+        # a%3Ab), restored with ADD PARTITION below
+        spark.sql("CREATE TABLE hv.e (a INT) PARTITIONED BY (n INT, s STRING) STORED AS PARQUET")
+        spark.sql("ALTER TABLE hv.e ADD PARTITION (n=1, s='a:b')")
+        spark.sql("INSERT INTO hv.e PARTITION (n=2, s='b/c 100%') VALUES (1)")
+        e_parts = ["n=1/s=a%3Ab", "n=2/s=b%2Fc 100%25"]
         from hive_ddl_extract_tool_spark.catalog.extractor import ExtractConfig, extract_ddl
         add = extract_ddl(spark, "hv", "*", None, ExtractConfig(use_add_sql=True))
         assert "CREATE TABLE hv.t" in add.replace("`", "")
         assert "ROW FORMAT SERDE" in add            # Hive-format fidelity (AS SERDE)
-        assert add.count("ADD PARTITION") == 2
+        assert add.count("ADD PARTITION") == 4
+        assert "ADD PARTITION (n='1',s='a:b')" in add, add
         msck = extract_ddl(spark, "hv", "*", None, ExtractConfig(use_add_sql=False))
         assert "MSCK REPAIR TABLE t;" in msck
+        assert "MSCK REPAIR TABLE e;" not in msck   # escaped paths force ADD PARTITION
 
         # Migration round-trip FIXPOINT -- the tool's entire purpose: apply
         # the generated script (db renamed, as a cluster migration would) and
@@ -80,6 +90,7 @@ def scenario_script(workdir: str) -> str:
         for s in stmts:
             spark.sql(s)
         assert [r[0] for r in spark.sql("SHOW PARTITIONS hv2.t").collect()] == ["dt=x", "dt=y"]
+        assert sorted(r[0] for r in spark.sql("SHOW PARTITIONS hv2.e").collect()) == e_parts
         dst = extract_ddl(spark, "hv2", "*", None, ExtractConfig(use_add_sql=True))
         def canon(t, db):
             return "\\n".join(ln for ln in t.replace(db, "DB").splitlines()
@@ -142,8 +153,9 @@ def run_fixpoint(workdir: str | None = None, timeout: int = 300) -> dict:
         "sec": round(time.monotonic() - t0, 1),
         "line": ("OK   §2A catalog fixpoint: Derby metastore extract -> apply "
                  "-> re-extract identical, ctx+abs (AS SERDE, ADD PARTITION "
-                 "x2, MSCK; use_context=False arm: qualified names + "
-                 "absolute locations on an external table)"
+                 "x4 incl. INT and path-escaped values, MSCK; "
+                 "use_context=False arm: qualified names + absolute "
+                 "locations on an external table)"
                  if ok else "FAIL §2A catalog fixpoint"),
         "stdout_tail": proc.stdout[-2000:],
         "stderr_tail": proc.stderr[-2000:],

@@ -9,7 +9,8 @@ and per-query status, so a driver-sweep discrepancy can be diffed against
 what this environment saw.
 """
 import sys, time, glob, os
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import duckdb
 import pyarrow.parquet as pq
 import __spark_entry__ as e
@@ -96,6 +97,6 @@ fails += 0 if cat["ok"] else 1
 # failure (the exit code flipped but the recorded count stayed 0).
 parity.append(f"FAILS: {fails}\n")
 
-with open("/root/repo/PARITY.md", "w") as f:
+with open(os.path.join(REPO, "PARITY.md"), "w") as f:
     f.write("\n".join(parity))
 sys.exit(1 if fails else 0)
