@@ -6,26 +6,37 @@ HiveServer2 over Thrift and writes one .sql script that recreates matching
 tables on another cluster: CREATE DATABASE / USE / SHOW CREATE TABLE output /
 partition restore (MSCK REPAIR or ALTER TABLE ADD PARTITION). Here a single
 Hive-enabled SparkSession is both metastore client and SQL executor
-(`ExtractHiveDDL.java`'s three RPC paths collapse into the session:
-`spark.sql` for names and DDL text, its SessionCatalog for partitions), and
-the script ordering is deterministic (the reference
+(`ExtractHiveDDL.java`'s three RPC paths collapse into the session: its
+catalog for names, metadata and partitions, and the SHOW CREATE TABLE
+command run directly for the DDL text; `spark.sql` only for datasource
+tables), and the script ordering is deterministic (the reference
 interleaves tables nondeterministically via parallelStream on a shared
 writer, ExtractHiveDDL.java:109).
 
 Reference parity notes (each function cites the behavior it re-expresses):
 
-- glob database/table enumeration ........ ExtractHiveDDL.java:58,141-149
+- glob database/table enumeration (R1/R2)  ExtractHiveDDL.java:58,141-149:
+  the catalog's full listing filtered with StringUtils.filterPattern, the
+  filter SHOW DATABASES/TABLES LIKE apply; the pattern is not pushed into
+  the metastore, whose matcher reads it differently.
+    * deviation: a name SHOW DATABASES would backtick-quote (digits
+      only, `123`) is listed as the catalog stores it (123).
 - degrade-to-empty on table-list errors .. ExtractHiveDDL.java:146-148
+- DDL text (R4) .......................... HiveClient.java:82-92: the
+  table's metadata picks the form. Hive-serde tables and views: the
+  command SHOW CREATE TABLE ... AS SERDE plans to
+  (ShowCreateTableAsSerdeCommand), run directly; datasource tables: one
+  plain SHOW CREATE TABLE statement.
 - CREATE TABLE header quoting fixup ...... ExtractHiveDDL.java:154-191
 - partition strategy decision table ...... ExtractHiveDDL.java:205-252
     * default partition => MSCK .......... :212-218,233 (README.md:39-41)
     * uppercase rel. path => ADD ......... :219-228,234 (README.md:43-45)
     * both => fatal ...................... :231-232     (README.md:47-49)
 - partition name + object scans (R7/R8) .. ExtractHiveDDL.java:199,207: one
-  SessionCatalog.getTableMetadata + one listPartitions per table (the
-  reference's listPartitionNames + listPartitions), whatever the partition
-  count; names built as SHOW PARTITIONS builds them, locations as DESCRIBE
-  prints them.
+  ExternalCatalog.getTable (shared with the DDL text) + one listPartitions
+  per table (the reference's listPartitionNames + listPartitions),
+  whatever the partition count; names built as SHOW PARTITIONS builds
+  them, locations as DESCRIBE prints them.
 - partition spec formatting k='v',k2='v2'  ExtractHiveDDL.java:263-276
     * deliberate deviation: values are path-unescaped (%XX) and SQL-escaped
       (' and \\), so dt='a:b' replays as 'a:b'; the reference quotes the
@@ -175,31 +186,46 @@ def add_partition_sql(
 # --------------------------------------------------------------------------
 
 def list_databases(spark: SparkSession, pattern: str) -> list[str]:
-    """R1: glob-matched database names, sorted for deterministic output."""
-    rows = spark.sql(f"SHOW DATABASES LIKE '{pattern}'").collect()
-    return sorted(r[0] for r in rows)
+    """R1: glob-matched database names, sorted for deterministic output.
+    The filter is the one SHOW DATABASES LIKE applies
+    (StringUtils.filterPattern over every name), run on the catalog's
+    listing; the Hive catalog's listDatabases(pattern) would push the
+    pattern into the metastore, which reads it differently (``x_[ab]*``
+    matches nothing there)."""
+    api = _jvm_api(spark._jvm)
+    return sorted(_seq(api.filter_pattern(_catalog(spark).listDatabases(), pattern)))
 
 
 def list_tables(spark: SparkSession, db: str, pattern: str) -> list[str]:
-    """R2: glob-matched table names; errors degrade to an empty list
-    (ExtractHiveDDL.java:146-148). Excludes temp views (not catalog tables)."""
+    """R2: glob-matched table names, filtered as SHOW TABLES LIKE filters
+    them (not pushed into the metastore, see list_databases); errors
+    degrade to an empty list (ExtractHiveDDL.java:146-148). The external
+    catalog holds no temp views, and no global temp database."""
+    api = _jvm_api(spark._jvm)
+    catalog = _catalog(spark)
     try:
-        rows = spark.sql(f"SHOW TABLES IN `{db}` LIKE '{pattern}'").collect()
-        return sorted(r["tableName"] for r in rows if not r["isTemporary"])
+        names = catalog.externalCatalog().listTables(catalog.format(db))
+        return sorted(_seq(api.filter_pattern(names, pattern)))
     except Exception:
         return []
 
 
-def get_create_ddl(spark: SparkSession, db: str, table: str) -> str:
+def get_create_ddl(spark: SparkSession, db: str, table: str, meta=None) -> str:
     """R4+R5+R6: fetch SHOW CREATE TABLE text, apply the header fixup, strip
     trailing whitespace, terminate with ';' (HiveClient.java:82-92,
-    ExtractHiveDDL.java:154-175). `AS SERDE` preserves Hive-format fidelity
-    for Hive tables; plain output is used for non-Hive (e.g. datasource)
-    tables where AS SERDE is unsupported."""
-    try:
-        ddl = spark.sql(f"SHOW CREATE TABLE `{db}`.`{table}` AS SERDE").collect()[0][0]
-    except Exception:
+    ExtractHiveDDL.java:154-175). The table's metadata picks the form:
+    Hive-serde tables and views get the `AS SERDE` text, from the command
+    that statement plans to (ShowCreateTableAsSerdeCommand), run directly;
+    datasource tables, which `AS SERDE` rejects, get one plain SHOW CREATE
+    TABLE statement. ``meta`` is the table's CatalogTable when the caller
+    has already fetched it."""
+    meta = _table_metadata(spark, db, table) if meta is None else meta
+    api = _jvm_api(spark._jvm)
+    if api.is_datasource_table(meta):
         ddl = spark.sql(f"SHOW CREATE TABLE `{db}`.`{table}`").collect()[0][0]
+    else:
+        command = api.show_create_as_serde(api.table_identifier(table, api.some(db)), api.no_output)
+        ddl = command.run(spark._jsparkSession).head().getString(0)
     lines = [fix_create_table(strip_catalog_prefix(line)) for line in ddl.splitlines()]
     return "\n".join(lines).rstrip() + ";"
 
@@ -208,13 +234,18 @@ def get_create_ddl(spark: SparkSession, db: str, table: str) -> str:
 def _jvm_api(jvm) -> SimpleNamespace:
     """The JVM classes the catalog scans call, resolved once per gateway:
     every step of a ``jvm.a.b.C`` lookup is a py4j round trip."""
-    catalog = jvm.org.apache.spark.sql.catalyst.catalog
+    catalyst = jvm.org.apache.spark.sql.catalyst
+    command = jvm.org.apache.spark.sql.execution.command
     return SimpleNamespace(
-        table_identifier=jvm.org.apache.spark.sql.catalyst.TableIdentifier,
+        table_identifier=catalyst.TableIdentifier,
         some=jvm.scala.Some,
         none=jvm.scala.Option.empty(),
-        partition_path_string=catalog.ExternalCatalogUtils.getPartitionPathString,
-        uri_to_string=catalog.CatalogUtils.URIToString,
+        no_output=jvm.org.apache.spark.api.python.PythonUtils.toSeq(jvm.java.util.ArrayList()),
+        filter_pattern=catalyst.util.StringUtils.filterPattern,
+        is_datasource_table=command.DDLUtils.isDatasourceTable,
+        show_create_as_serde=command.ShowCreateTableAsSerdeCommand,
+        partition_path_string=catalyst.catalog.ExternalCatalogUtils.getPartitionPathString,
+        uri_to_string=catalyst.catalog.CatalogUtils.URIToString,
     )
 
 
@@ -223,12 +254,18 @@ def _seq(jseq) -> list:
     return [jseq.apply(i) for i in range(jseq.length())]
 
 
+def _catalog(spark: SparkSession):
+    """The session's SessionCatalog (serves both the in-memory and the Hive
+    catalog)."""
+    return spark._jsparkSession.sessionState().catalog()
+
+
 def _table_metadata(spark: SparkSession, db: str, table: str):
-    """The table's CatalogTable from the session's SessionCatalog, which
-    serves both the in-memory and the Hive catalog: one catalog call."""
-    api = _jvm_api(spark._jvm)
-    ident = api.table_identifier(table, api.some(db))
-    return spark._jsparkSession.sessionState().catalog().getTableMetadata(ident)
+    """The table's CatalogTable, one call on the external catalog, so
+    ``db`` and ``table`` are names as the catalog lists them.
+    SessionCatalog.getTableMetadata would first check that the database and
+    the table exist, two more metastore round trips."""
+    return _catalog(spark).externalCatalog().getTable(db, table)
 
 
 def _table_path(spark: SparkSession, meta) -> str:
@@ -254,9 +291,8 @@ def get_partitions(
     if not cols:
         return []
     api = _jvm_api(spark._jvm)
-    catalog = spark._jsparkSession.sessionState().catalog()
     parts = []
-    for part in _seq(catalog.listPartitions(meta.identifier(), api.none)):
+    for part in _seq(_catalog(spark).externalCatalog().listPartitions(db, table, api.none)):
         spec = part.spec()
         name = "/".join(api.partition_path_string(c, spec.apply(c)) for c in cols)
         parts.append((name, api.uri_to_string(part.location())))
@@ -272,11 +308,12 @@ def get_table_location(spark: SparkSession, db: str, table: str) -> str:
 # --------------------------------------------------------------------------
 
 def partition_restore_sql(
-    spark: SparkSession, db: str, table: str, cfg: ExtractConfig
+    spark: SparkSession, db: str, table: str, cfg: ExtractConfig, meta=None
 ) -> list[str]:
     """R9-R17: the partition-restore block for one table. The table's
-    metadata is fetched once, for both its partitions and its path."""
-    meta = _table_metadata(spark, db, table)
+    metadata (``meta`` when the caller has it) serves both its partitions
+    and its path."""
+    meta = _table_metadata(spark, db, table) if meta is None else meta
     parts = get_partitions(spark, db, table, meta)
     if not parts:
         return []  # R9: empty short-circuit (ExtractHiveDDL.java:200-203)
@@ -301,7 +338,9 @@ def partition_restore_sql(
 
 def table_section(spark: SparkSession, db: str, table: str, cfg: ExtractConfig) -> list[str]:
     """R19: banner + optional beeline marker + CREATE + partition block
-    (ExtractHiveDDL.java:118-136)."""
+    (ExtractHiveDDL.java:118-136). The table's metadata is fetched once,
+    for its CREATE text and its partition block."""
+    meta = _table_metadata(spark, db, table)
     lines = [
         "-- ------------------------------------------------------------------",
         f"-- Table: {db}.{table}",
@@ -309,8 +348,8 @@ def table_section(spark: SparkSession, db: str, table: str, cfg: ExtractConfig) 
     ]
     if cfg.beeline_markers:
         lines.append(f'!sh echo "Creating table: {table}...";')
-    lines.append(get_create_ddl(spark, db, table))
-    partition_lines = partition_restore_sql(spark, db, table, cfg)
+    lines.append(get_create_ddl(spark, db, table, meta))
+    partition_lines = partition_restore_sql(spark, db, table, cfg, meta)
     if partition_lines:
         if cfg.beeline_markers:
             lines.append(f'!sh echo "Creating partitions for table: {table}...";')

@@ -306,23 +306,26 @@ def _cand_shingle_sizes(
     clustering AND the window's partitioning, so dedup + count plan with
     no further shuffle (the q44 pyramid trick). No broadcast hint on
     cand_docs, as before: AQE demotes the semi to broadcast when small."""
+    return cached_df(spark, key, lambda: _cand_shingle_sizes_build(spark, sf_dir, cand, ds))
 
-    def build() -> DataFrame:
-        cand_docs = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .union(cand.select("doc_b"))
-            # No .distinct(): a LEFT SEMI join is EXISTS -- duplicate
-            # build-side keys cannot change its output (r15).
-        )
-        src = _doc_shingles_raw(spark, sf_dir) if ds is None else ds
-        ds_c = src.join(cand_docs, "doc_id", "semi").repartition("doc_id")
-        if ds is None:
-            ds_c = ds_c.distinct()
-        return ds_c.withColumn(
-            "sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-        )
 
-    return cached_df(spark, key, build)
+def _cand_shingle_sizes_build(
+    spark: SparkSession, sf_dir: str, cand: DataFrame, ds: DataFrame | None = None
+) -> DataFrame:
+    """The un-staged build behind _cand_shingle_sizes."""
+    cand_docs = (
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .union(cand.select("doc_b"))
+        # No .distinct(): a LEFT SEMI join is EXISTS -- duplicate
+        # build-side keys cannot change its output (r15).
+    )
+    src = _doc_shingles_raw(spark, sf_dir) if ds is None else ds
+    ds_c = src.join(cand_docs, "doc_id", "semi").repartition("doc_id")
+    if ds is None:
+        ds_c = ds_c.distinct()
+    return ds_c.withColumn(
+        "sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+    )
 
 
 def _verified_pair_stats(ds_c: DataFrame, cand: DataFrame) -> DataFrame:

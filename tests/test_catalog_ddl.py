@@ -23,12 +23,19 @@ from hive_ddl_extract_tool_spark.catalog.extractor import (
     extract_ddl,
     fix_create_table,
     format_partition_spec,
+    get_create_ddl,
     get_partitions,
     get_table_location,
     list_databases,
     list_tables,
     msck_sql,
     partition_restore_sql,
+)
+from tools.catalog_parity import (
+    LISTING_PATTERNS,
+    sql_path_databases,
+    sql_path_ddl,
+    sql_path_tables,
 )
 
 # --------------------------------------------------------------------------
@@ -222,10 +229,12 @@ def test_escaped_partition_values_list_and_replay(spark, escape_tables, value):
 
 
 def test_extract_statement_budget(spark, ddl_fixtures):
-    """Per table the only statement is SHOW CREATE TABLE ... AS SERDE (plus
-    the plain form when AS SERDE is unsupported): partitions and locations
-    come from catalog calls, so the count does not grow with the partition
-    count (part_lower has 3 partitions, part_upper 2, plain_t none)."""
+    """Every fixture table is a datasource table, so its one statement is a
+    plain SHOW CREATE TABLE: the metadata says up front that AS SERDE does
+    not apply. Names, metadata and partitions are catalog calls, so nothing
+    else is issued -- no SHOW DATABASES/TABLES, and the count does not grow
+    with the partition count (part_lower has 3 partitions, part_upper 2,
+    plain_t none)."""
     issued = []
     orig = spark.sql
 
@@ -233,19 +242,66 @@ def test_extract_statement_budget(spark, ddl_fixtures):
         issued.append(q)
         return orig(q, *a, **k)
 
-    budgets = {}
     for table in ("part_lower", "part_upper", "plain_t"):
         issued.clear()
         with mock.patch.object(spark, "sql", side_effect=recording_sql):
             extract_ddl(spark, "ddl_db1", table, None, ExtractConfig())
-        per_table = [q for q in issued if not q.startswith(("SHOW DATABASES", "SHOW TABLES"))]
-        t = f"`ddl_db1`.`{table}`"
-        assert per_table in (
-            [f"SHOW CREATE TABLE {t} AS SERDE"],
-            [f"SHOW CREATE TABLE {t} AS SERDE", f"SHOW CREATE TABLE {t}"],
-        ), per_table
-        budgets[table] = len(per_table)
-    assert len(set(budgets.values())) == 1, budgets
+        assert issued == [f"SHOW CREATE TABLE `ddl_db1`.`{table}`"], issued
+    issued.clear()
+    with mock.patch.object(spark, "sql", side_effect=recording_sql):
+        extract_ddl(spark, "ddl_db*", "plain_t|sales_*|other_t", None, ExtractConfig())
+    assert issued == [
+        f"SHOW CREATE TABLE `{db}`.`{t}`"
+        for db, t in [("ddl_db1", "plain_t"), ("ddl_db1", "sales_2023"),
+                      ("ddl_db1", "sales_2024"), ("ddl_db2", "other_t")]
+    ], issued
+
+
+def test_show_create_matches_sql_path(spark, ddl_fixtures):
+    """get_create_ddl picks its path from the table's metadata; the text
+    equals the SQL path's (AS SERDE, else the plain form) for every fixture
+    table and a view (which takes the AS SERDE command)."""
+    spark.sql("CREATE VIEW ddl_db2.v_other AS SELECT id FROM ddl_db2.other_t")
+    try:
+        tables = [(db, t) for db in ("ddl_db1", "ddl_db2") for t in list_tables(spark, db, "*")]
+        assert ("ddl_db2", "v_other") in tables
+        for db, table in tables:
+            assert get_create_ddl(spark, db, table) == sql_path_ddl(spark, db, table), table
+    finally:
+        spark.sql("DROP VIEW ddl_db2.v_other")
+
+
+@pytest.fixture(scope="module")
+def listing_fixtures(spark):
+    names = ["x_a1", "x_b2", "x_c3", "xa", "a", "b", "ab"]
+    for name in names:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")
+        spark.sql(f"CREATE TABLE IF NOT EXISTS x_a1.{name} (i INT) USING parquet")
+    spark.range(1).createOrReplaceTempView("x_a9")
+    yield
+    spark.catalog.dropTempView("x_a9")
+    for name in names:
+        spark.sql(f"DROP DATABASE {name} CASCADE")
+
+
+@pytest.mark.parametrize("pattern", LISTING_PATTERNS)
+def test_listing_matches_show_like(spark, listing_fixtures, pattern):
+    """list_databases/list_tables filter as SHOW DATABASES/TABLES LIKE do,
+    and leave out temp views (x_a9), which SHOW TABLES lists as temporary."""
+    assert list_databases(spark, pattern) == sql_path_databases(spark, pattern)
+    assert list_tables(spark, "x_a1", pattern) == sql_path_tables(spark, "x_a1", pattern)
+    assert "x_a9" not in list_tables(spark, "x_a1", pattern)
+
+
+def test_listing_excludes_temp_views(spark, listing_fixtures):
+    """The parity above is not vacuous: SHOW TABLES lists the temp view,
+    and the character class and the empty branch select."""
+    shown = spark.sql("SHOW TABLES IN x_a1 LIKE 'x_*'").collect()
+    assert ("x_a9", True) in [(r["tableName"], r["isTemporary"]) for r in shown]
+    assert list_tables(spark, "x_a1", "x_*") == ["x_a1", "x_b2", "x_c3"]
+    assert list_tables(spark, "x_a1", "x_[ab]*") == ["x_a1", "x_b2"]
+    assert list_databases(spark, "x_[ab]*") == ["x_a1", "x_b2"]
+    assert list_databases(spark, "a||b") == ["a", "b"]
 
 
 def test_strategy_lower_default_msck(spark, ddl_fixtures):

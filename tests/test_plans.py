@@ -7,7 +7,6 @@ results stay correct.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hive_ddl_extract_tool_spark.operators import all_queries
@@ -182,15 +181,7 @@ def test_q42_dsc_stage_is_one_exchange(spark, sf_dir):
 
     clear_cache()
     cand = d._lsh_candidates(spark, sf_dir)
-    cand_docs = cand.select(F.col("doc_a").alias("doc_id")).union(cand.select("doc_b"))
-    build = (
-        d._doc_shingles_raw(spark, sf_dir)
-        .join(cand_docs, "doc_id", "semi")
-        .repartition("doc_id")
-        .distinct()
-        .withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-    )
-    plan = formatted_plan(build)
+    plan = formatted_plan(d._cand_shingle_sizes_build(spark, sf_dir, cand))
     assert plan.count("Exchange hashpartitioning") <= 2, (
         f"dedup/size chain shuffles beyond the doc_id repartition:\n{plan}"
     )

@@ -39,6 +39,37 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Glob patterns the catalog listings must filter exactly as SHOW ... LIKE
+# does: case, alternation (incl. an empty branch), literal '.', '%', a
+# regex character class, and surrounding spaces.
+LISTING_PATTERNS = ["*", "x_*", "X_*", "a|b", "a||b", "x.y", "*a", "x%", "x_[ab]*", " x_* "]
+
+
+# SQL-path oracles: the statements whose results the extractor's catalog
+# calls must reproduce.
+
+def sql_path_databases(spark, pattern: str) -> list[str]:
+    return sorted(r[0] for r in spark.sql(f"SHOW DATABASES LIKE '{pattern}'").collect())
+
+
+def sql_path_tables(spark, db: str, pattern: str) -> list[str]:
+    rows = spark.sql(f"SHOW TABLES IN `{db}` LIKE '{pattern}'").collect()
+    return sorted(r["tableName"] for r in rows if not r["isTemporary"])
+
+
+def sql_path_ddl(spark, db: str, table: str) -> str:
+    """SHOW CREATE TABLE ... AS SERDE, else the plain form, then the
+    extractor's own fixups."""
+    from hive_ddl_extract_tool_spark.catalog.extractor import fix_create_table, strip_catalog_prefix
+
+    t = f"`{db}`.`{table}`"
+    try:
+        ddl = spark.sql(f"SHOW CREATE TABLE {t} AS SERDE").collect()[0][0]
+    except Exception:
+        ddl = spark.sql(f"SHOW CREATE TABLE {t}").collect()[0][0]
+    lines = [fix_create_table(strip_catalog_prefix(line)) for line in ddl.splitlines()]
+    return "\n".join(lines).rstrip() + ";"
+
 
 def scenario_script(workdir: str) -> str:
     """The full fixpoint scenario, parameterized by a scratch dir (the
@@ -66,8 +97,44 @@ def scenario_script(workdir: str) -> str:
         spark.sql("ALTER TABLE hv.e ADD PARTITION (n=1, s='a:b')")
         spark.sql("INSERT INTO hv.e PARTITION (n=2, s='b/c 100%') VALUES (1)")
         e_parts = ["n=1/s=a%3Ab", "n=2/s=b%2Fc 100%25"]
-        from hive_ddl_extract_tool_spark.catalog.extractor import ExtractConfig, extract_ddl
+        # one table of each SHOW CREATE shape; all go through the fixpoint
+        spark.sql("CREATE EXTERNAL TABLE hv.txt (a INT, b STRING) ROW FORMAT DELIMITED "
+                  "FIELDS TERMINATED BY ',' STORED AS TEXTFILE "
+                  "LOCATION '" + {workdir!r} + "/ext/hv_txt'")
+        spark.sql("CREATE TABLE hv.bk (a INT, b STRING) CLUSTERED BY (a) SORTED BY (a) "
+                  "INTO 4 BUCKETS STORED AS ORC")
+        spark.sql("CREATE TABLE hv.cv (c CHAR(5), v VARCHAR(10)) STORED AS PARQUET")
+        spark.sql("CREATE TABLE hv.ds (a INT, s STRING) USING parquet")
+        spark.sql("CREATE VIEW hv.v AS SELECT a, dt FROM hv.t")
+        from hive_ddl_extract_tool_spark.catalog.extractor import (
+            ExtractConfig, extract_ddl, get_create_ddl, list_databases, list_tables)
+        from tools.catalog_parity import (
+            LISTING_PATTERNS, sql_path_databases, sql_path_ddl, sql_path_tables)
+        hv_tables = list_tables(spark, "hv", "*")
+        assert hv_tables == ["bk", "cv", "ds", "e", "t", "txt", "v"], hv_tables
+        for t in hv_tables:
+            assert get_create_ddl(spark, "hv", t) == sql_path_ddl(spark, "hv", t), t
+
+        # listings filter as SHOW ... LIKE does; the metastore's own pattern
+        # matching (listDatabases(pattern)) finds nothing for x_[ab]*
+        for d in ("x_a1", "x_b2", "x_c3"):
+            spark.sql("CREATE DATABASE " + d)
+        for p in LISTING_PATTERNS + ["[bc]*"]:
+            assert list_databases(spark, p) == sql_path_databases(spark, p), p
+            assert list_tables(spark, "hv", p) == sql_path_tables(spark, "hv", p), p
+        assert list_databases(spark, "x_[ab]*") == ["x_a1", "x_b2"]
+        assert list_tables(spark, "hv", "[bc]*") == ["bk", "cv"]
+
+        # statement budget: Hive-format tables and views issue no spark.sql,
+        # the datasource table one plain SHOW CREATE TABLE
+        issued = []
+        sql = spark.sql
+        spark.sql = lambda q, *a, **k: issued.append(q) or sql(q, *a, **k)
+        extract_ddl(spark, "hv", "bk|cv|e|t|txt|v", None, ExtractConfig(use_add_sql=True))
+        assert issued == [], issued
         add = extract_ddl(spark, "hv", "*", None, ExtractConfig(use_add_sql=True))
+        spark.sql = sql
+        assert issued == ["SHOW CREATE TABLE `hv`.`ds`"], issued
         assert "CREATE TABLE hv.t" in add.replace("`", "")
         assert "ROW FORMAT SERDE" in add            # Hive-format fidelity (AS SERDE)
         assert add.count("ADD PARTITION") == 4
@@ -91,6 +158,7 @@ def scenario_script(workdir: str) -> str:
             spark.sql(s)
         assert [r[0] for r in spark.sql("SHOW PARTITIONS hv2.t").collect()] == ["dt=x", "dt=y"]
         assert sorted(r[0] for r in spark.sql("SHOW PARTITIONS hv2.e").collect()) == e_parts
+        assert list_tables(spark, "hv2", "*") == hv_tables
         dst = extract_ddl(spark, "hv2", "*", None, ExtractConfig(use_add_sql=True))
         def canon(t, db):
             return "\\n".join(ln for ln in t.replace(db, "DB").splitlines()
@@ -152,8 +220,10 @@ def run_fixpoint(workdir: str | None = None, timeout: int = 300) -> dict:
         "ok": ok,
         "sec": round(time.monotonic() - t0, 1),
         "line": ("OK   §2A catalog fixpoint: Derby metastore extract -> apply "
-                 "-> re-extract identical, ctx+abs (AS SERDE, ADD PARTITION "
-                 "x4 incl. INT and path-escaped values, MSCK; "
+                 "-> re-extract identical, ctx+abs (AS SERDE text, delimited "
+                 "external, bucketed ORC, CHAR/VARCHAR, datasource and view "
+                 "tables, ADD PARTITION x4 incl. INT and path-escaped values, "
+                 "MSCK; listings as SHOW ... LIKE; "
                  "use_context=False arm: qualified names + absolute "
                  "locations on an external table)"
                  if ok else "FAIL §2A catalog fixpoint"),
