@@ -72,7 +72,6 @@ class ExtractConfig:
     use_context: bool = True    # USE_CONTEXT: USE db + unqualified names + relative paths
     beeline_markers: bool = False  # emit the `!sh echo ...` progress lines
     progress: bool = False      # R3: per-table "(i/total)" progress lines on stderr
-    refresh_cache: bool = False  # per-db metadata refresh (reference flushCache, :112)
 
 
 class DefaultPartitionConflictError(ValueError):
@@ -358,17 +357,6 @@ def table_section(spark: SparkSession, db: str, table: str, cfg: ExtractConfig) 
     return lines
 
 
-def refresh_database(spark: SparkSession, db: str, table_pattern: str = "*") -> int:
-    """Per-database metadata refresh (reference `client.flushCache()`,
-    ExtractHiveDDL.java:112): drop Spark's cached metadata/file listings for
-    every matching table so a long-lived session sees a mutating metastore.
-    Returns the number of tables refreshed."""
-    tables = list_tables(spark, db, table_pattern)
-    for t in tables:
-        spark.catalog.refreshTable(f"`{db}`.`{t}`")
-    return len(tables)
-
-
 def extract_ddl(
     spark: SparkSession,
     database_pattern: str,
@@ -393,9 +381,6 @@ def extract_ddl(
 
     cfg = cfg or ExtractConfig()
     dbs = list_databases(spark, database_pattern)
-    if cfg.refresh_cache:
-        for db in dbs:
-            refresh_database(spark, db, table_pattern)
     db_tables = {db: list_tables(spark, db, table_pattern) for db in dbs}
     total = sum(len(ts) for ts in db_tables.values())
     done = 0

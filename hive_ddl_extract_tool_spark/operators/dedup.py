@@ -1922,12 +1922,12 @@ def _q202_candidates(ds: DataFrame) -> DataFrame:
     """Prefix-filter candidate tier: (doc_a, doc_b) pairs sharing a rarest-
     shingle prefix key and passing the 5*min >= 4*max size filter. The ONE
     definition both the shipped pipeline (_q202_build) and the scale
-    measurement (tools/scale_stress.py) use, so the measured candidate
+    measurement (tools/scale.py stress) use, so the measured candidate
     curve can never drift from the production expressions."""
     # dfreq is corpus-sized (one row per distinct shingle) but the static
     # estimator sizes the aggregate under the broadcast threshold -- at a
     # 10x-inflated sf0.1 the driver-side broadcast build OOMs (measured by
-    # tools/scale_stress.py). The MERGE hint pins a shuffle join: both
+    # tools/scale.py stress). The MERGE hint pins a shuffle join: both
     # sides exchange on sh, nothing corpus-scaling ever lands on the driver.
     dfreq = ds.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).hint("merge")
     per_doc = (
@@ -2231,7 +2231,7 @@ def _q245_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tf-idf weighted postings, df-pruned. The MERGE hint pins the dfreq
     join to a shuffle: dfreq scales with the distinct-shingle count, so it
     must never broadcast (same driver-OOM failure mode as q202's dfreq
-    join; see tools/scale_stress.py)."""
+    join; see tools/scale.py stress)."""
     raw = _doc_shingles_raw(spark, sf_dir)
     tf = raw.groupBy("doc_id", "sh").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).hint("merge")

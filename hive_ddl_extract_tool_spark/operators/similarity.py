@@ -143,7 +143,7 @@ def _buckets(spark: SparkSession, sf_dir: str, n_planes: int = N_PLANES) -> Data
     row explosion (the posexplode x planes form shuffled 512x the rows).
     The oracle contract covers the default N_PLANES; the parameter exists
     because bucket count must grow with the corpus (2^bits ~ N keeps
-    occupancy constant -- tools/scale_stress.py measures exactly that)."""
+    occupancy constant -- tools/scale.py stress measures exactly that)."""
     emb = load(spark, sf_dir, "embeddings")
     bucket = F.lit(0).cast("bigint")
     for p in range(n_planes):
@@ -482,7 +482,7 @@ def q49b_cosine_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_q49b(n_planes: int = N_PLANES) -> str:
     """DuckDB twin of the multi-probe LSH near-dup at any plane count. The
-    registered oracle covers the fixture's N_PLANES; tools/x10_oracle.py
+    registered oracle covers the fixture's N_PLANES; tools/scale.py oracle
     passes the scaled-bits production recipe (8+⌈log₂K⌉ planes at K× corpus)
     to hash-verify it at 10× through the SAME probe-mask generator."""
     return f"""
@@ -524,7 +524,7 @@ ORACLE_Q49B = _oracle_q49b()
 # q49c: recall/precision audit of the LSH scale path against SAMPLED exact
 # truth -- turns "q49 audits q49b" into a driver-checked number that stays
 # linear in the corpus (round-8: the full-truth formulation recomputed the
-# N^2/2 tier and cost 385 s at 10x in tools/x10_smoke.py)
+# N^2/2 tier and cost 385 s at 10x in tools/scale.py smoke)
 # --------------------------------------------------------------------------
 
 RECALL_SAMPLE_N = 128  # anchors: the 128 smallest h60(vec_id) -- fixed size
@@ -821,7 +821,7 @@ def train_centroids(
 
     n_cells / init parameterize the cell count (SemDeDup's recipe sizes
     cells to constant occupancy, so at scale n_cells grows with the
-    corpus; tools/scale_stress.py measures exactly that). The oracle
+    corpus; tools/scale.py stress measures exactly that). The oracle
     contract only covers the default N_CELLS."""
     # memo key carries the init CONTENT (not just its presence): two calls
     # with the same (sf_dir, n_cells) but different explicit seeds must not
@@ -1373,7 +1373,7 @@ def _cell_salted(vecs: DataFrame) -> DataFrame:
 
 def _semdedup_from_ranked(ranked: DataFrame) -> DataFrame:
     """The cell-confined dedup report over any (vec_id, embedding, t2)
-    staging -- q103 uses the N_CELLS oracle contract; tools/scale_stress.py
+    staging -- q103 uses the N_CELLS oracle contract; tools/scale.py stress
     feeds it corpus-proportional cell counts to measure the Σcell²-vs-
     linear cost shape."""
     # unit-normalize once (q49's optimization) as a pure PROJECTION of the
@@ -1432,7 +1432,7 @@ def _semdedup_from_ranked(ranked: DataFrame) -> DataFrame:
 def _oracle_q103(cent0_sql: str = _CENT0_SQL) -> str:
     """DuckDB twin of the trained-cell SemDeDup report against any (ci, cv)
     init relation. The registered q103 oracle uses the fixture contract
-    (first-N_CELLS init); tools/x10_oracle.py passes the scaled-cells init
+    (first-N_CELLS init); tools/scale.py oracle passes the scaled-cells init
     (8 seeds per inflated copy) to hash-verify the production recipe at 10x
     corpus through the SAME unrolled Lloyd rounds and drop rule."""
     rounds = []

@@ -202,7 +202,7 @@ def _table_stream(spark: SparkSession, sf_dir: str, table: str,
     produces). The old pathGlobFilter-on-sf_dir pattern silently streamed
     ZERO rows on the directory layout -- the filter matches leaf file
     names, and a directory's leaves are part-*.parquet, not
-    {table}.parquet (caught by tools/x10_smoke.py on the inflated corpus:
+    {table}.parquet (caught by tools/scale.py smoke on the inflated corpus:
     q131 returned 0 rows with no error). Dir-ness is resolved through the
     Hadoop FS API, so cluster stores (hdfs://, s3a://, ...) take the same
     decision path as local disk -- os.path.isdir returns False for every

@@ -422,20 +422,6 @@ def test_progress_lines(spark, ddl_fixtures, capsys):
     assert "(2/2) ddl_db1.sales_2024" in err
 
 
-def test_refresh_database(spark, ddl_fixtures):
-    """Metastore cache refresh hook (reference flushCache per database,
-    ExtractHiveDDL.java:112): refreshes every matching table and reports
-    the count; also reachable from extract_ddl via cfg.refresh_cache."""
-    from hive_ddl_extract_tool_spark.catalog.extractor import refresh_database
-
-    assert refresh_database(spark, "ddl_db1", "sales_*") == 2
-    assert refresh_database(spark, "no_such_db", "*") == 0
-    # end-to-end: the flag path doesn't disturb extraction
-    cfg = ExtractConfig(refresh_cache=True)
-    script = extract_ddl(spark, "ddl_db2", "*", None, cfg)
-    assert "other_t" in script
-
-
 def test_cli_contract(spark, ddl_fixtures, tmp_path):
     """Reference CLI parity: exactly 3 args or non-zero exit
     (ExtractHiveDDL.java:36-45); success writes the script file."""

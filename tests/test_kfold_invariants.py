@@ -1,8 +1,8 @@
-"""In-suite drive of the K-fold invariant gate (tools/kfold_invariants.py)
-at fixture cost (sf0.001, K=2): the laws themselves, the mod-stride
-histogram checker, and the row-level scaling checker all execute — a
-regression in an inflation invariant, a family pipeline, or a law
-transcription fails the suite, not just the out-of-band K=100 run.
+"""In-suite drive of `tools/scale.py invariants` at fixture cost (sf0.001,
+K=2): the laws themselves, the mod-stride histogram checker, and the
+row-level scaling checker all execute — a regression in an inflation
+invariant, a family pipeline, or a law transcription fails the suite, not
+just the out-of-band K=100 run.
 
 Also pins that the checkers can actually FAIL: a deliberately corrupted
 "K" frame must be flagged (a comparator that silently passes everything
@@ -12,22 +12,28 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.conftest import SF_DIR
 
 
-def test_gate_end_to_end_at_k2(spark, tmp_path):
-    import os
+@pytest.fixture(scope="module")
+def gate_k2(spark, tmp_path_factory):
+    from tools.scale import invariants
 
-    from tools.kfold_invariants import run_gate
+    work_dir = str(tmp_path_factory.mktemp("inv"))
+    return work_dir, invariants(spark, SF_DIR, 2, work_dir, keep_failed=False).rows
 
-    results = run_gate(spark, SF_DIR, 2, str(tmp_path), keep_failed=False)
-    # round-11 hygiene contract: every inflated corpus is retired by the
-    # gate itself (per-family + finally sweep) -- at K=300 the copies are
-    # multi-GB, so a leak here is real disk residue, not untidiness
-    leftovers = [d for d in os.listdir(tmp_path) if d.startswith("inv_")]
+
+def test_gate_end_to_end_at_k2(gate_k2):
+    work_dir, results = gate_k2
+    # every inflated corpus is retired by the gate itself: at K=300 the
+    # copies are multi-GB, so a leak here is real disk residue
+    leftovers = os.listdir(work_dir)
     assert not leftovers, f"gate leaked inflated corpora: {leftovers}"
     assert [r["query"] for r in results] == [
         "q40_exact_dedup", "q202_prefix_filter_join",
@@ -47,8 +53,22 @@ def test_gate_end_to_end_at_k2(spark, tmp_path):
         assert by[q]["rows_k"] == 2 * by[q]["rows_1"], by[q]
 
 
+def test_retired_corpora_leave_no_staged_artifacts(gate_k2):
+    """Retiring a corpus also drops what was staged from it: a stage left
+    behind outlives the corpus on disk and would be served to a later
+    corpus inflated at the same path."""
+    from hive_ddl_extract_tool_spark.operators._cache import _CACHE
+
+    work_dir, _ = gate_k2
+    stale = [key for _app, key in _CACHE if work_dir in key]
+    assert not stale, f"cache entries of retired corpora: {stale}"
+    tag = "".join(c if c.isalnum() else "_" for c in work_dir)
+    left = [d for d in os.listdir(tempfile.gettempdir()) if tag in d]
+    assert not left, f"staged dirs of retired corpora: {left}"
+
+
 def test_hist_law_flags_a_corrupted_frame(spark):
-    from tools.kfold_invariants import hist_law
+    from tools.scale import hist_law
 
     base = spark.createDataFrame([(1, 3), (2, 5)], "keep_id long, n_dups long")
     good = spark.createDataFrame(
@@ -62,7 +82,7 @@ def test_hist_law_flags_a_corrupted_frame(spark):
 
 
 def test_row_law_flags_a_wrong_scale(spark):
-    from tools.kfold_invariants import row_law
+    from tools.scale import row_law
 
     base = spark.createDataFrame([("a", 3), ("b", 5)], "g string, n long")
     good = spark.createDataFrame([("a", 6), ("b", 10)], "g string, n long")

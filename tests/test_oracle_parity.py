@@ -271,7 +271,7 @@ def test_q103_semdedup_conserves_vectors(spark, sf_dir):
 
 
 def test_semdedup_scaled_cells_matches_default_at_base(spark, sf_dir):
-    """tools/scale_stress.py's scaled-cells measurement drives
+    """tools/scale.py stress's scaled-cells measurement drives
     train_centroids(n_cells=..., init=...) and _semdedup_from_ranked
     directly; pin that parameterized path. With the default cell count and
     the default init passed EXPLICITLY, the report must be row-identical

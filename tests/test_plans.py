@@ -988,7 +988,7 @@ def test_prefix_filter_join_shapes(spark, sf_dir):
     # the dfreq aggregate scales with the corpus: its join must stay a
     # shuffle join (MERGE hint) -- at a 10x-inflated sf0.1 the static
     # under-estimate crossed the broadcast threshold and the driver-side
-    # build OOM'd (tools/scale_stress.py finding, round 7). Probe: raise
+    # build OOM'd (tools/scale.py stress finding, round 7). Probe: raise
     # the broadcast threshold so every size-decided join in the candidate
     # subtree broadcasts at test scale; the only SortMergeJoin that can
     # remain is the hint-pinned dfreq join, so the assertion cannot be
@@ -1007,7 +1007,7 @@ def test_prefix_filter_join_shapes(spark, sf_dir):
 def test_tfidf_simjoin_never_broadcasts_dfreq(spark, sf_dir):
     """q245's document-frequency aggregate is corpus-sized; the postings
     build must join it with a shuffle, never a driver-side broadcast
-    (same scale_stress finding as q202's dfreq)."""
+    (same `scale.py stress` finding as q202's dfreq)."""
     from hive_ddl_extract_tool_spark.operators.dedup import _q245_postings
 
     plan = formatted_plan(_q245_postings(spark, sf_dir))

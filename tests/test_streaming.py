@@ -698,7 +698,7 @@ def test_stream_sources_read_directory_layout_tables(spark, sf_dir, tmp_path):
     streams must read both layouts identically -- the old
     pathGlobFilter-on-sf_dir pattern matched only the file layout and
     silently streamed ZERO rows from a directory (caught by
-    tools/x10_smoke.py: q131 returned 0 on the inflated corpus with no
+    tools/scale.py smoke: q131 returned 0 on the inflated corpus with no
     error)."""
     import os
 

@@ -1,6 +1,6 @@
 """Property tests for the verification infrastructure itself: the shared
 canon/hash (tools/verify_lib.py) and the corpus-inflation invariants that
-every at-scale gate (scale_stress, x10_smoke, x10_oracle) leans on.
+every at-scale gate (tools/scale.py) leans on.
 
 A defect HERE silently corrupts the evidence, not the engine -- which is
 exactly why it gets the hypothesis treatment rather than a spot check."""
@@ -15,6 +15,7 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.scale import SUFFIX, WORD_RUN, rotation_slices
 from tools.verify_lib import canon, hash_rows
 
 # the scalar universe the driver's comparator actually sees
@@ -78,7 +79,7 @@ def test_canon_is_deterministic_and_typed(v):
 
 
 # --------------------------------------------------------------------------
-# inflation invariants (tools/scale_stress.inflate's documented contract)
+# inflation invariants (tools/scale.inflate's documented contract)
 # --------------------------------------------------------------------------
 
 _WORDS = st.lists(
@@ -99,7 +100,7 @@ def test_inflation_suffix_keeps_copies_token_disjoint(words, j1, j2):
     text = " ".join(words)
 
     def inflate_text(j: int) -> set[str]:
-        return set(re.sub(r"([a-z0-9]+)", rf"\1x{j}", text).split())
+        return set(re.sub(WORD_RUN, r"\1" + SUFFIX.format(j), text).split())
 
     assert not (inflate_text(j1) & inflate_text(j2))
 
@@ -118,17 +119,21 @@ def test_inflation_rotation_preserves_norm_and_within_copy_dots(vec, j):
     it is not assertable universally; real float embeddings are aperiodic
     almost surely, and exact cross-copy dups would only inflate, never
     deflate, the measured candidate counts.)"""
+    def rotate(v: list[float]) -> list[float]:
+        return [x for s, n in rotation_slices(j, len(v)) for x in v[s - 1:s - 1 + n]]
+
     j %= len(vec)
     if j == 0:
         return
-    rot = vec[j:] + vec[:j]
+    rot = rotate(vec)
+    assert rot == vec[j:] + vec[:j]  # the slices are a left rotation by j
     assert sorted(rot) == sorted(vec)  # permutation => identical norm
     # within-copy dot products: rotating BOTH vectors of a pair by j leaves
     # the aligned product MULTISET unchanged (the sum is then equal up to
     # accumulation order -- and cross-ENGINE exactness is unaffected either
     # way, because both engines see the same rotated arrays)
     vec2 = vec[1:] + vec[:1]
-    rot2 = vec2[j:] + vec2[:j]
+    rot2 = rotate(vec2)
     assert sorted(a * b for a, b in zip(rot, rot2)) == sorted(
         a * b for a, b in zip(vec, vec2)
     )

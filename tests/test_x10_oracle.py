@@ -1,11 +1,11 @@
-"""Unit coverage for the 10x-corpus oracle gate (tools/x10_oracle.py).
+"""Unit coverage for the K-fold oracle gate (`tools/scale.py oracle`).
 
 The gate itself runs out-of-band (K=10 at sf0.1 -> X10_ORACLE.json); these
 tests pin the pieces that keep it honest at fixture cost:
 
 - verify_lib's canon is TYPE-SENSITIVE (the whole point of sharing it
-  between drive_driver and x10_oracle is that neither compare can drift
-  into type-folding);
+  between drive_driver and the oracle gate is that neither compare can
+  drift into type-folding);
 - the scaled-cells DuckDB init relation degenerates to the registered
   fixture contract at k=1 (same ci numbering, same vectors), so the
   scaled oracle is anchored to the already-adjudicated q103 oracle.
@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.conftest import SF_DIR
 from tools.verify_lib import canon, compare, hash_rows
-from tools.x10_oracle import scaled_cent0_sql
+from tools.scale import scaled_cent0_sql
 
 
 def test_canon_is_type_sensitive():
@@ -62,15 +62,15 @@ def test_hash_rows_is_order_insensitive_but_value_strict():
 
 
 def test_inflate_all_doubles_every_table(spark, tmp_path):
-    """inflate_all composes the three inflations (documents/embeddings,
-    events, TPC-H facts) through symlinked layers: every inflated table
+    """inflate with its default table set writes every inflatable table
+    (documents/embeddings, events, TPC-H facts) into one directory: each
     must be exactly K-fold, every dimension must pass through unchanged,
-    and the layered symlinks must resolve (a broken chain reads as a
-    missing table, not a wrong count)."""
-    from tools.scale_stress import inflate_all
+    and the symlinks must resolve (a broken link reads as a missing table,
+    not a wrong count)."""
+    from tools.scale import inflate
 
     dst = str(tmp_path / "all")
-    inflate_all(spark, SF_DIR, dst, 2)
+    inflate(spark, SF_DIR, dst, 2)
     inflated = ("documents", "embeddings", "events", "orders", "lineitem")
     for t in inflated:
         n_src = spark.read.parquet(f"{SF_DIR}/{t}.parquet").count()
@@ -95,19 +95,18 @@ def test_inflate_all_doubles_every_table(spark, tmp_path):
 
 
 def test_gate_end_to_end_at_k2(spark, tmp_path):
-    """The whole gate (inflate -> 26 family checks on both engines) at a
+    """The whole gate (inflate -> 29 family checks on both engines) at a
     fixture-cheap configuration (sf0.001, K=2): a regression in the
     inflation invariants, a family pipeline, or a parameterized oracle
     builder fails the suite, not just the out-of-band 10x run."""
-    from tools.x10_oracle import run_gate
+    from tools.scale import oracle
 
     n_src = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
-    n_docs, results = run_gate(spark, SF_DIR, 2, str(tmp_path),
-                               keep_failed=False)
-    assert n_docs == 2 * n_src
-    # round-11 hygiene contract: the layered x{K}/x{K}_events/x{K}_tpch
-    # corpora are retired together in run_gate's finally
-    leftovers = [d for d in os.listdir(tmp_path) if d.startswith("x2")]
+    gate = oracle(spark, SF_DIR, 2, str(tmp_path), keep_failed=False)
+    results = gate.rows
+    assert gate.n_docs == 2 * n_src
+    # the corpus is retired once every family check is done
+    leftovers = os.listdir(tmp_path)
     assert not leftovers, f"gate leaked inflated corpora: {leftovers}"
     assert [r["query"] for r in results] == [
         "q40_exact_dedup", "q42_minhash_lsh_dedup", "q202_prefix_filter_join",

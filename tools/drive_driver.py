@@ -33,7 +33,7 @@ register_views(con, SF)
 
 
 # canon/hash_rows live in tools/verify_lib.py, shared with the 10x-corpus
-# oracle gate (tools/x10_oracle.py) so the two compares cannot drift.
+# oracle gate (tools/scale.py oracle) so the two compares cannot drift.
 
 parity = [f"# PARITY — local verify environment\n",
           f"- duckdb {duckdb.__version__}; python {sys.version.split()[0]}; "

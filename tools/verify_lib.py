@@ -4,7 +4,7 @@ The canonicalization is TYPE-SENSITIVE on purpose (a Python float never
 folds into an int, bool is not an int, Decimal is its own thing): if the
 two engines disagree on TYPE, that is a divergence we must see -- the
 round-4 driver-only divergence class reproduces here by construction.
-`tools/drive_driver.py` (the sf0.01 sweep) and `tools/x10_oracle.py`
+`tools/drive_driver.py` (the sf0.01 sweep) and `tools/scale.py oracle`
 (the 10x-corpus check) share these so the two gates cannot drift.
 """
 from __future__ import annotations
