@@ -48,27 +48,26 @@ from pyspark.sql import DataFrame, SparkSession
 # whatever it still never reached.
 #
 # Round 16 instance: (1) empty -- every query has a driver row; (2) the
-# four queries whose PLANS were rewritten by this optimization round and
-# whose cohort slot does not already stage them -- q42 (candidate-sized
-# verify artifacts), q02 (pre-joined dim chain), q202/q218 (shared verify
-# helper) -- their old green rows adjudicate the old plans, so they go
-# first (q193, the fifth rewrite, is already in the stale cohort below);
-# (3) stalest green: the full r11-era block (45 queries, age 4 -- they
-# would exceed MAX_AGE at r17 close), ordered by MEASURED sf0.01 sweep
-# cost ascending (tools/drive_driver.py per-query timings from this
-# round's opening 247/247 FAILS: 0 drive) with the streaming-harness /
-# sink tier last -- its finite-replay micro-batches are the cohort's cost
-# outliers, so a wall-clock truncation drops replay shapes before any
-# cheap relational refresh. The 1 remaining slot is the heaviest r12-era
-# entry (q217) to shave r17's refresh need -- age 3, so losing it to
-# truncation breaches nothing. Staged prefix measured before commit
-# (tools/measure_prefix.py, the r11 discipline): see BASELINE.md
+# five queries whose PLANS were rewritten by this optimization round and
+# whose cohort slot does not already stage them -- q40 (16-byte exact-dedup
+# key), q42 (candidate-sized verify artifacts), q02 (pre-joined dim chain),
+# q202/q218 (shared verify helper) -- their old green rows adjudicate the
+# old plans, so they go first (q193, the sixth rewrite, is already in the
+# stale cohort below); (3) stalest green: the full r11-era block (45
+# queries, age 4 -- they would exceed MAX_AGE at r17 close), ordered by
+# MEASURED sf0.01 sweep cost ascending (tools/drive_driver.py per-query
+# timings from this round's opening 247/247 FAILS: 0 drive) with the
+# streaming-harness / sink tier last -- its finite-replay micro-batches are
+# the cohort's cost outliers, so a wall-clock truncation drops replay
+# shapes before any cheap relational refresh. Staged prefix measured
+# before commit (`tools/drive_driver.py --prefix 50`): see BASELINE.md
 # §Round-16. Total staged: exactly 50 -- the MEASURED driver budget,
 # pinned by tests/test_freshness.py since r10. Everything green in r15
 # (the r10-era rotation) and the r12/r13/r14 blocks falls through to
 # module order.
 _PRIORITY = [
     # (2) plans rewritten this round -- need fresh adjudication first
+    "q40_exact_dedup",
     "q02_revenue_by_nation",
     "q42_minhash_lsh_dedup",
     "q218_sorted_neighborhood",
@@ -123,8 +122,6 @@ _PRIORITY = [
     "q194_python_datasink",
     "q175_stream_upsert_sink",
     "q170_stream_file_sink",
-    # heaviest r12-era green (age 3) in the last slack slot
-    "q217_sql_scripting",
 ]
 
 

@@ -66,43 +66,11 @@ def main(argv: list[str] | None = None) -> int:
         if args.query not in oracles:
             print(f"{args.query} is rows-only (no oracle); nothing to check", file=sys.stderr)
             return 2
-        import datetime as dt
-        import math
-
-        import duckdb
-
-        from .tables import TABLES
-
-        def canon(v):
-            if v is None:
-                return "NULL"
-            if isinstance(v, bool):
-                return str(v)
-            if isinstance(v, float):
-                if math.isnan(v):
-                    return "NaN"
-                if v == int(v) and abs(v) < 1e15:
-                    return str(int(v))
-                return repr(v)
-            if isinstance(v, dt.datetime):
-                return v.replace(tzinfo=None).isoformat()
-            return str(v)
-
-        def canon_rows(cols, rows):
-            order = sorted(range(len(cols)), key=lambda i: cols[i])
-            return sorted(tuple(canon(r[i]) for i in order) for r in rows)
+        from .verify import compare, oracle_rows
 
         scols, srows = df.columns, [tuple(r) for r in df.collect()]
-        con = duckdb.connect()
-        for t in TABLES:
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
-        rel = con.sql(oracles[args.query])
-        ocols, orows = list(rel.columns), rel.fetchall()
-        ok = (
-            sorted(scols) == sorted(ocols)
-            and len(srows) == len(orows)
-            and canon_rows(scols, srows) == canon_rows(ocols, orows)
-        )
+        ocols, orows = oracle_rows(oracles[args.query], args.sf_dir)
+        ok = compare(scols, srows, ocols, orows)
         print(
             f"{'OK' if ok else 'MISMATCH'}: {args.query} spark={len(srows)} rows, "
             f"oracle={len(orows)} rows in {time.perf_counter() - t0:.2f}s"

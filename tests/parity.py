@@ -1,87 +1,22 @@
-"""Local mirror of the driver's correctness gate: run a queries() entry on
-Spark and its oracle_sql() twin on DuckDB over the same parquet tables, then
-compare row count, column-name set, and an order-insensitive multiset of
-canonicalized values.
-
-Stricter than the driver in two ways: exact value equality (post-rounding),
-and TYPE-SENSITIVE canonicalization -- a Python float never folds into an
-int.  Round-4 post-mortem: DuckDB widens sum(BIGINT) to HUGEINT, whose
-int-valued cells folded to the same string as Spark's BIGINT under the old
-canon, masking a divergence that the driver's comparator (which fetches
-HUGEINT as float64/Decimal) flagged on every sweep.  If a query only
-passes when types are folded, it will flake on the driver's value hash, so
-we want the failure here first.
-"""
+"""The pytest form of the oracle check (hive_ddl_extract_tool_spark.verify):
+run a Spark result's oracle twin on DuckDB over the same parquet tables and
+fail with a sample of the rows only one side has."""
 
 from __future__ import annotations
 
-import datetime as _dt
-import math
-
-import duckdb
-
-from hive_ddl_extract_tool_spark.tables import TABLES
+from hive_ddl_extract_tool_spark.verify import canon_rows, compare, oracle_rows
 
 
-def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
-
-def _canon_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):  # before int: bool is an int subclass
-        return "bool:" + str(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "float:NaN"
-        return "float:" + repr(v)
-    if isinstance(v, int):
-        return "int:" + str(v)
-    if isinstance(v, _dt.datetime):
-        return "ts:" + v.replace(tzinfo=None).isoformat()
-    if isinstance(v, _dt.date):
-        return "date:" + v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon_cell(x) for x in v) + "]"
-    return type(v).__name__ + ":" + str(v)
-
-
-def _canon_rows(columns: list[str], rows: list[tuple]) -> list[tuple]:
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    return sorted(tuple(_canon_cell(r[i]) for i in order) for r in rows)
-
-
-def compare(spark_df, oracle_sql: str, sf_dir: str) -> None:
-    con = duckdb_connection(sf_dir)
-    try:
-        expected = con.sql(oracle_sql)
-        exp_cols = list(expected.columns)
-        exp_rows = expected.fetchall()
-    finally:
-        con.close()
-
-    act_cols = list(spark_df.columns)
-    act_rows = [tuple(r) for r in spark_df.collect()]
-
-    assert sorted(act_cols) == sorted(exp_cols), (
-        f"column mismatch: spark={sorted(act_cols)} oracle={sorted(exp_cols)}"
+def assert_parity(spark_df, oracle_sql: str, sf_dir) -> None:
+    scols, srows = spark_df.columns, [tuple(r) for r in spark_df.collect()]
+    ocols, orows = oracle_rows(oracle_sql, str(sf_dir))
+    if compare(scols, srows, ocols, orows):
+        return
+    a, e = canon_rows(scols, srows), canon_rows(ocols, orows)
+    a_set, e_set = set(a), set(e)
+    raise AssertionError(
+        f"spark {sorted(scols)} x {len(srows)} rows != "
+        f"oracle {sorted(ocols)} x {len(orows)} rows\n"
+        f"  spark-only rows (sample): {[r for r in a if r not in e_set][:5]}\n"
+        f"  oracle-only rows (sample): {[r for r in e if r not in a_set][:5]}"
     )
-    assert len(act_rows) == len(exp_rows), (
-        f"row count mismatch: spark={len(act_rows)} oracle={len(exp_rows)}"
-    )
-
-    a = _canon_rows(act_cols, act_rows)
-    e = _canon_rows(exp_cols, exp_rows)
-    if a != e:
-        diff_a = [r for r in a if r not in set(e)][:5]
-        diff_e = [r for r in e if r not in set(a)][:5]
-        raise AssertionError(
-            f"value mismatch ({len(diff_a)}+ rows differ)\n"
-            f"  spark-only rows (sample): {diff_a}\n"
-            f"  oracle-only rows (sample): {diff_e}\n"
-            f"  columns (sorted): {sorted(act_cols)}"
-        )

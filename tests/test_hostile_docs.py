@@ -9,14 +9,13 @@ identical canonicalized result on each affected query.
 
 from __future__ import annotations
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from hive_ddl_extract_tool_spark.operators import all_oracles, all_queries
 
-from .parity import _canon_rows
+from .parity import assert_parity
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -39,21 +38,7 @@ def _write_docs(path, texts):
 
 
 def _assert_parity(spark, sf_dir, name):
-    sdf = QUERIES[name](spark, str(sf_dir))
-    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    try:
-        con.sql(
-            f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-        )
-        rel = con.sql(ORACLES[name])
-        ocols, orows = list(rel.columns), rel.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(ocols), f"{name}: column mismatch"
-    assert _canon_rows(scols, srows) == _canon_rows(ocols, orows), (
-        f"{name}: value mismatch on hostile docs\nspark={srows}\noracle={orows}"
-    )
+    assert_parity(QUERIES[name](spark, str(sf_dir)), ORACLES[name], sf_dir)
 
 
 HOSTILE_TEXTS = [

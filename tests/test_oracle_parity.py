@@ -8,7 +8,7 @@ import pytest
 
 from hive_ddl_extract_tool_spark.operators import all_oracles, all_queries
 
-from .parity import compare
+from .parity import assert_parity
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -22,7 +22,7 @@ def test_every_oracle_has_a_query():
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_parity(name, spark, sf_dir):
     df = QUERIES[name](spark, sf_dir)
-    compare(df, ORACLES[name], sf_dir)
+    assert_parity(df, ORACLES[name], sf_dir)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

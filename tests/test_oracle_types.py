@@ -21,6 +21,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
+from hive_ddl_extract_tool_spark.verify import register_views
 
 # Types proven driver-safe by four rounds of green sweep rows (r1-r4:
 # VARCHAR/BIGINT/INTEGER/DOUBLE/BOOLEAN all appear in driver-green
@@ -34,9 +35,7 @@ SAFE_DUCK_TYPES = {"VARCHAR", "BIGINT", "INTEGER", "DOUBLE", "BOOLEAN"}
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    register_views(con, sf_dir)
     yield con
     con.close()
 

@@ -374,14 +374,14 @@ def test_semdedup_salting_preserves_pair_set(spark, sf_dir):
     pairwise SQL -- salting changes the exchange key, never the pairs."""
     import hive_ddl_extract_tool_spark.operators.similarity as sim
     from hive_ddl_extract_tool_spark.operators._cache import clear_cache
-    from .parity import compare
+    from .parity import assert_parity
 
     old = sim.SEMDEDUP_CELL_CAP
     sim.SEMDEDUP_CELL_CAP = 2
     try:
         clear_cache()
         df = QUERIES["q103_semdedup"](spark, sf_dir)
-        compare(df, sim.ORACLE_Q103, sf_dir)
+        assert_parity(df, sim.ORACLE_Q103, sf_dir)
     finally:
         sim.SEMDEDUP_CELL_CAP = old
         clear_cache()

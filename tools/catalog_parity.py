@@ -160,10 +160,10 @@ def scenario_script(workdir: str) -> str:
         assert sorted(r[0] for r in spark.sql("SHOW PARTITIONS hv2.e").collect()) == e_parts
         assert list_tables(spark, "hv2", "*") == hv_tables
         dst = extract_ddl(spark, "hv2", "*", None, ExtractConfig(use_add_sql=True))
-        def canon(t, db):
+        def normalized(t, db):
             return "\\n".join(ln for ln in t.replace(db, "DB").splitlines()
                               if "transient_lastDdlTime" not in ln)
-        assert canon(add, "hv") == canon(dst, "hv2"), (add, dst)
+        assert normalized(add, "hv") == normalized(dst, "hv2"), (add, dst)
 
         # Second arm -- use_context=False (ExtractHiveDDL.java:268-274's
         # OTHER branch): qualified `db.table` names, NO `USE db;` header,
@@ -194,7 +194,7 @@ def scenario_script(workdir: str) -> str:
             spark.sql(s)
         assert [r[0] for r in spark.sql("SHOW PARTITIONS dbdstq.t").collect()] == ["dt=x", "dt=y"]
         dst2 = extract_ddl(spark, "dbdstq", "*", None, cfg_abs)
-        assert canon(add2, "dbsrcq") == canon(dst2, "dbdstq"), (add2, dst2)
+        assert normalized(add2, "dbsrcq") == normalized(dst2, "dbdstq"), (add2, dst2)
         print("HIVE_METASTORE_OK")
     """)
 

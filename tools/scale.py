@@ -14,9 +14,9 @@ Subcommands (each builds its own corpus from --sf-dir; see "Lifecycle"):
                   declared quadratic audit baselines (SKIP) are skipped.
 - ``oracle``      one representative per family (ORACLE_FAMILIES) on both
                   engines, on the same K-fold parquet, under the driver's
-                  pass rule (schema names + row count + type-strict value
-                  hash, tools/verify_lib.py): correct at scale, not only
-                  executes at scale.
+                  pass rule (column names + type-strict canonical rows,
+                  hive_ddl_extract_tool_spark/verify.py): correct at
+                  scale, not only executes at scale.
 - ``invariants``  Spark-only exact K-scaling laws, for K past where the
                   single-node DuckDB twin can follow (K=100/300).
 - ``tables``      rebuild SCALE.md's two oracle tables from the --out
@@ -121,7 +121,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tools.verify_lib import TABLES, hash_rows, register_views
+from hive_ddl_extract_tool_spark.tables import TABLES
+from hive_ddl_extract_tool_spark.verify import compare, hash_rows, register_views
 
 STRIDE = 1_000_000_000
 CHARSET = r"^[a-z0-9 ]*$"   # documents must match, or a token escapes the suffix
@@ -426,7 +427,7 @@ ORACLE_FAMILIES = (
 
 
 def _compare(sdf: DataFrame, con, sql: str) -> dict:
-    """The driver's pass rule, with each side hashed exactly once."""
+    """The oracle check's verdict, plus each side's row count and hash."""
     t0 = time.monotonic()
     scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
     t_spark = round(time.monotonic() - t0, 2)
@@ -434,11 +435,10 @@ def _compare(sdf: DataFrame, con, sql: str) -> dict:
     rel = con.sql(sql)
     ocols, orows = list(rel.columns), rel.fetchall()
     t_duck = round(time.monotonic() - t0, 2)
-    hs, ho = hash_rows(scols, srows), hash_rows(ocols, orows)
     return {
-        "match": sorted(scols) == sorted(ocols) and len(srows) == len(orows) and hs == ho,
+        "match": compare(scols, srows, ocols, orows),
         "rows_spark": len(srows), "rows_oracle": len(orows),
-        "hash_spark": hs, "hash_oracle": ho,
+        "hash_spark": hash_rows(scols, srows), "hash_oracle": hash_rows(ocols, orows),
         "sec_spark": t_spark, "sec_duck": t_duck,
     }
 
