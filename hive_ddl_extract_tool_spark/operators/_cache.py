@@ -46,8 +46,8 @@ def _evict(full_key: tuple[str, str]) -> None:
 def scratch_dir(prefix: str, sf_dir: str, reset: bool = False) -> str:
     """Deterministic per-(query, sf) scratch path under the temp dir --
     the single definition of the naming contract (prefix + sanitized
-    sf_dir), so a sanitization change cannot desynchronize the seven
-    operator sites and the test that reconstructs the path. Deterministic
+    sf_dir), so a sanitization change cannot desynchronize the operator
+    sites and the tests that look a path up. Deterministic
     (not mkdtemp) on purpose: repeated sweeps overwrite in place instead
     of leaking a corpus copy per run. reset=True also clears it (the
     q170 rule: a crashed prior run's leftovers never leak into the next

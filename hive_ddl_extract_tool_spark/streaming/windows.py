@@ -8,6 +8,18 @@ q60-q62 run the window assignment in batch mode (same `F.window` /
 completion; in complete output mode its result equals the batch aggregation,
 so even the streaming path gets an exact DuckDB oracle.
 
+Every streaming query runs through one drain contract, `_drain`: stop any
+leftover query of the same name, start the writer with
+Trigger.AvailableNow (the source snapshot at start is consumed, one
+micro-batch per file where maxFilesPerTrigger=1, then the query ends by
+itself), wait at most DRAIN_TIMEOUT_S and raise TimeoutError rather than
+hand back a partly drained table, and stop the query in `finally`. The
+stateful queries q107/q140/q170/q175/q178/q180/q182 pin their
+state-store partition count to STREAM_STATE_PARTITIONS; the other eight
+start under the session's shuffle-partition count. The events replays
+with heartbeat sentinels (q140/q170/q178/q182) share one source builder,
+`_replay_stream`.
+
 Spark aligns windows to the epoch; DuckDB's `time_bucket` origin
 (2000-01-01) is 5-minute aligned to the epoch, so bucket starts agree for
 the divisors used here. Window bounds are emitted as formatted strings to
@@ -16,9 +28,13 @@ keep the cross-engine hash deterministic.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..operators._rounding import mround
 from ..operators.advanced import ORACLE_Q88, SESSION_GAP_US
@@ -36,44 +52,53 @@ SESSION_GAP = "30 minutes"
 EVENTS_STAGED_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                         "event_type string, value double, props string")
 
-# State-store partition count for the stream-stream joins (q107/q140). A
-# stateful query fixes its shuffle-partition count at the FIRST checkpoint,
-# so this is a per-query sizing decision, not a session default: each
-# partition costs a state store instance + a task per stateful operator per
-# micro-batch, and at replay volumes (~1M events) 32 partitions spend more
-# on per-batch task/state overhead than on data (measured 20 s -> 11.5 s at
-# sf0.1 going 32 -> 8). On a cluster, size it like any state store:
-# ~stream-rate x state horizon / healthy-partition-size, growing with
-# volume -- the env override is the knob.
-import os as _os
+# Upper bound on one streaming drain. A stuck stream must fail loudly, not
+# return a partly drained table that then reads as an oracle mismatch (or
+# passes a weak check on partial data).
+DRAIN_TIMEOUT_S = 300
 
-STREAM_JOIN_PARTITIONS = int(_os.environ.get("SPARK_GRAFT_STREAM_JOIN_PARTITIONS", "8"))
-
-
-class _stream_partitions:
-    """Temporarily pin spark.sql.shuffle.partitions while a streaming query
-    STARTS (the checkpoint snapshots it); restores the session value after.
-    The drive/bench run queries sequentially, so the temporary pin cannot
-    leak into a concurrent batch plan."""
-
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+# State-store partition count for the stateful queries that pin it. A
+# stateful query fixes its shuffle-partition count at the FIRST
+# checkpoint, so this is a per-query sizing decision, not a session
+# default: each partition costs a state store instance + a task per
+# stateful operator per micro-batch, and at replay volumes (~1M events) 32
+# partitions spend more on per-batch task/state overhead than on data
+# (measured 20 s -> 11.5 s at sf0.1 going 32 -> 8). On a cluster, size it
+# like any state store: ~stream-rate x state horizon / healthy-partition-size.
+STREAM_STATE_PARTITIONS = 8
 
 
-def _stop_active(spark: SparkSession, name: str) -> None:
-    """Stop any still-registered query with this memory-sink name: a prior
-    invocation that died mid-drain leaves its query active, and starting a
-    second one under the same name fails."""
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, name: str, partitions: int | None = None
+) -> StreamingQuery:
+    """Run `writer` as query `name` to the end of its source and return the
+    stopped query (its progress log stays readable). A still-registered
+    query with this name -- a prior invocation that died mid-drain -- is
+    stopped first, since a second one under the same name fails to start.
+    `partitions` pins spark.sql.shuffle.partitions only while the query
+    STARTS (the checkpoint snapshots it); the session value is restored
+    before the wait. The drive/bench run queries sequentially, so the pin
+    cannot leak into a concurrent batch plan."""
+    for active in spark.streams.active:
+        if active.name == name:
+            active.stop()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        q = writer.queryName(name).trigger(availableNow=True).start()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    try:
+        # awaitTermination(timeout) returns False on timeout instead of raising
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"{name} did not drain within {DRAIN_TIMEOUT_S} s; "
+                "refusing to return a partially-drained result"
+            )
+    finally:
+        q.stop()
+    return q
 
 
 def _run_base(prefix: str, sf_dir: str) -> str:
@@ -231,21 +256,19 @@ def _is_directory(spark: SparkSession, path: str) -> bool:
 
     parsed = urlparse(path)
     if parsed.scheme in ("", "file"):
-        import os as _os2
-
         # urlparse().path, not removeprefix: file://localhost/x parses to
         # (scheme='file', netloc='localhost', path='/x'), and a naive
         # prefix strip leaves '//localhost/x', which isdir rejects for a
         # real directory -- re-selecting the zero-row glob branch for a
         # perfectly valid file: URI.
         local = parsed.path if parsed.scheme else path
-        if not _os2.path.exists(local):
+        if not os.path.exists(local):
             raise FileNotFoundError(
                 f"table path does not exist: {path!r} -- refusing to fall "
                 "into the pathGlobFilter branch, which would silently "
                 "stream zero rows"
             )
-        return _os2.path.isdir(local)
+        return os.path.isdir(local)
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -286,7 +309,6 @@ def q63_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window once the source drains, so the result equals the batch
     aggregation and the DuckDB oracle stays exact."""
     name = "q63_stream_result"
-    _stop_active(spark, name)
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -299,16 +321,7 @@ def q63_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(spark, agg.writeStream.outputMode("complete").format("memory"), name)
     return spark.table(name)
 
 
@@ -336,7 +349,6 @@ def q64_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark bounds the dedup state to the late-data horizon instead of
     the whole corpus (the reason this operator exists)."""
     name = "q64_dedup_result"
-    _stop_active(spark, name)
     stream = _events_stream(spark, sf_dir)
     deduped = (
         stream.withColumn("minute", F.date_trunc("minute", "ts"))
@@ -344,11 +356,7 @@ def q64_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute"])
         .select("user_id", "event_type", "minute")
     )
-    q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(spark, deduped.writeStream.outputMode("append").format("memory"), name)
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -377,7 +385,6 @@ def q70_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load as load_table
 
     name = "q70_enrich_result"
-    _stop_active(spark, name)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -394,11 +401,7 @@ def q70_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(spark, agg.writeStream.outputMode("complete").format("memory"), name)
     return spark.table(name)
 
 
@@ -424,16 +427,11 @@ def q98_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stateful import sessionize_stream
 
     name = "q98_stream_result"
-    _stop_active(spark, name)
     stream = _events_stream(spark, sf_dir).select(
         "event_id", "user_id", F.unix_micros("ts").alias("tus")
     )
     sess = sessionize_stream(stream, SESSION_GAP_US)
-    q = sess.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(spark, sess.writeStream.outputMode("update").format("memory"), name)
     return spark.table(name)
 
 
@@ -448,7 +446,6 @@ def q107_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed log equals the batch inequality join and the DuckDB oracle is
     exact. Batch twin of the same shape: q55's bucketized range join."""
     name = "q107_ssj_result"
-    _stop_active(spark, name)
 
     # ONE file source shared by both sides (the q140 shape): two
     # independent _events_stream calls would each create their own
@@ -480,12 +477,8 @@ def q107_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_val").alias("click_value"),
         )
     )
-    with _stream_partitions(spark, STREAM_JOIN_PARTITIONS):
-        q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(spark, joined.writeStream.outputMode("append").format("memory"), name,
+           STREAM_STATE_PARTITIONS)
     return spark.table(name)
 
 
@@ -531,7 +524,6 @@ def q131_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     name = "q131_gate_result"
-    _stop_active(spark, name)
     is_new = _is_new  # the single membership hash q128 and the oracle share
 
     # Static side: the standing index's band table (batch path, staged
@@ -569,11 +561,7 @@ def q131_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source")
         .dropDuplicates(["doc_id"])
     )
-    q = flagged.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(spark, flagged.writeStream.outputMode("append").format("memory"), name)
     return spark.table(name)
 
 
@@ -636,40 +624,49 @@ def _pin_mtime(path: str, mtime: float) -> None:
     the watermark jumps a day ahead, and every real event is late-dropped.
     So every staged source file gets an EXPLICIT, strictly increasing
     mtime instead of whatever the filesystem assigned."""
-    import os
-
     os.utime(path, (mtime, mtime))
 
 
-def _stage_events_copy(events_file: str, dst: str, mtime: float) -> None:
-    """Copy the staged events parquet into a live source dir with a pinned
-    mtime strictly older than any sentinel that follows."""
-    import shutil
-
-    shutil.copy(events_file, dst)
-    _pin_mtime(dst, mtime)
-
-
-def _write_sentinel(
-    spark: SparkSession, run_dir: str, name: str, ts, mtime: float | None = None
-) -> None:
+def _write_sentinel(spark: SparkSession, run_dir: str, name: str, ts, mtime: float) -> None:
     """One heartbeat file: a 'view' and a 'click' at `ts` with user_id -1,
     atomically moved into the live source directory so the running stream
     picks it up as a new file. ``mtime`` pins the file's modification time
     (see _pin_mtime: source ordering must not depend on filesystem tick
     granularity)."""
-    import os
-    import shutil
-
     rows = [(-1, ts, -1, k, 0.0, "{}") for k in ("view", "click")]
     sdf = spark.createDataFrame(rows, EVENTS_STAGED_SCHEMA).coalesce(1)
     tmp = f"{run_dir}/_tmp_{name}"
     sdf.write.mode("overwrite").parquet(tmp)
     part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
     os.replace(f"{tmp}/{part}", f"{run_dir}/{name}.parquet")
-    if mtime is not None:
-        _pin_mtime(f"{run_dir}/{name}.parquet", mtime)
+    _pin_mtime(f"{run_dir}/{name}.parquet", mtime)
     shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _replay_stream(spark: SparkSession, sf_dir: str, base: str, heartbeats: int) -> DataFrame:
+    """Replay source for the heartbeat queries: `{base}/src` holds the
+    staged events file, then `heartbeats` sentinel files at max event ts +
+    1, 2, ... days, with strictly increasing pinned mtimes so the events
+    drain before any sentinel. Read one file per micro-batch with
+    EVENTS_STAGED_SCHEMA."""
+    import datetime
+    import time
+
+    src = f"{base}/src"
+    os.makedirs(src)
+    events_file, max_ts = _staged_events_file(spark, sf_dir)
+    now = time.time()
+    shutil.copy(events_file, f"{src}/events.parquet")
+    _pin_mtime(f"{src}/events.parquet", now - 300)
+    for k in range(1, heartbeats + 1):
+        _write_sentinel(spark, src, f"heartbeat{k}", max_ts + datetime.timedelta(days=k),
+                        mtime=now - 300 + 100 * k)
+    return (
+        spark.readStream.schema(EVENTS_STAGED_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(src)
+    )
 
 
 def q140_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -678,46 +675,21 @@ def q140_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching: a 'view' with no same-user 'click' in the next 10 minutes
     must still emit (with NULL click columns), and may only do so once the
     watermark proves no matching click can ever arrive. A drained finite
-    source never proves that for the tail, so after the replayed log is
-    processed, two sentinel heartbeat files (~1/~2 days late, one 'view' +
-    one 'click' each so BOTH sides' watermarks advance) are dropped into
-    the LIVE source directory between drains: heartbeat 1 lifts the
+    source never proves that for the tail, so two sentinel heartbeat
+    files (~1/~2 days late, one 'view' + one 'click' each so BOTH sides'
+    watermarks advance) follow the replayed log in the source directory
+    (_replay_stream, later pinned mtimes): heartbeat 1 lifts the
     watermark past every real row's eviction bound, heartbeat 2 provides
     the following batch in which the engine actually evicts and emits the
     NULL rows. The Trigger.AvailableNow drain (maxFilesPerTrigger=1 -> one
     micro-batch per file, terminating when the snapshot is consumed) makes
-    the batch sequence deterministic where processAllAvailable raced. The
-    drained table then equals the batch LEFT JOIN and the oracle is exact;
-    state stays bounded by interval + late horizon (the forever-runnable
-    property), and the heartbeat is exactly how a production replay forces
-    final results out of a finite topic."""
-    import datetime
-    import shutil
-    import tempfile
-    import time
-
+    the batch sequence deterministic. The drained table then equals the
+    batch LEFT JOIN and the oracle is exact; state stays bounded by
+    interval + late horizon (the forever-runnable property), and the
+    heartbeat is exactly how a production replay forces final results out
+    of a finite topic."""
     name = "q140_soj_result"
-    _stop_active(spark, name)
-
-    events_file, max_ts = _staged_events_file(spark, sf_dir)
-    run_dir = tempfile.mkdtemp(prefix="q140_src_")
-    now = time.time()
-    _stage_events_copy(events_file, f"{run_dir}/events.parquet", now - 300)
-    _write_sentinel(spark, run_dir, "heartbeat1", max_ts + datetime.timedelta(days=1), mtime=now - 200)
-    _write_sentinel(spark, run_dir, "heartbeat2", max_ts + datetime.timedelta(days=2), mtime=now - 100)
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(run_dir)
-    )
+    stream = _replay_stream(spark, sf_dir, _run_base("q140_outer", sf_dir), heartbeats=2)
 
     def side(kind: str, prefix: str) -> DataFrame:
         return (
@@ -751,28 +723,8 @@ def q140_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows never flushed (observed; the nastiest kind of pushdown bug:
     # the optimization is correct for the DATA and wrong for the CLOCK).
     # Sentinels are filtered from the drained BATCH table instead.
-    with _stream_partitions(spark, STREAM_JOIN_PARTITIONS):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            # awaitTermination(timeout) returns False on timeout instead of
-            # raising; swallowing that would return a partially-drained
-            # memory table and report it as an oracle mismatch (or worse,
-            # pass a weak check on partial data) with no hint the query
-            # was killed mid-drain
-            if not q.awaitTermination(300):
-                raise TimeoutError(
-                    "q140 stream-stream outer join did not drain within "
-                    "300 s; refusing to return a partially-drained result"
-                )
-        finally:
-            q.stop()
-            shutil.rmtree(run_dir, ignore_errors=True)
+    _drain(spark, joined.writeStream.outputMode("append").format("memory"), name,
+           STREAM_STATE_PARTITIONS)
     return spark.table(name).filter(F.col("user_id") >= 0)
 
 
@@ -810,37 +762,9 @@ def q170_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches and the query would return the previous run's output — the
     reproducible-test inverse of production, where the checkpoint is
     exactly what you must keep."""
-    import datetime
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    name = "q170_sink_query"
-    _stop_active(spark, name)
-
     base = _run_base("q170_sink", sf_dir)
-    src_dir, sink_dir, ckpt_dir = f"{base}/src", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(src_dir)
-
-    events_file, max_ts = _staged_events_file(spark, sf_dir)
-    now = time.time()
-    _stage_events_copy(events_file, f"{src_dir}/events.parquet", now - 300)
-    _write_sentinel(spark, src_dir, "heartbeat1", max_ts + datetime.timedelta(days=1), mtime=now - 200)
-
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    sink_dir = f"{base}/out"
+    stream = _replay_stream(spark, sf_dir, base, heartbeats=1)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -852,17 +776,11 @@ def q170_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with _stream_partitions(spark, STREAM_JOIN_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .queryName(name)
-            .start()
-        )
-        q.awaitTermination()
+    writer = (
+        agg.writeStream.outputMode("append").format("parquet")
+        .option("path", sink_dir).option("checkpointLocation", f"{base}/ckpt")
+    )
+    _drain(spark, writer, "q170_sink_query", STREAM_STATE_PARTITIONS)
     # batch read THROUGH the sink's _spark_metadata transaction log — the
     # exactly-once read path (no sentinel filter needed: the heartbeat's
     # window never closed, so it was never emitted)
@@ -895,39 +813,16 @@ def q178_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-order double accumulation, so it crosses the oracle boundary
     through the shared mround/epsilon money contract like every other
     2dp sum."""
-    import os
-    import shutil
-    import tempfile
-
-    name = "q178_state_query"
-    _stop_active(spark, name)
-
     base = _run_base("q178_state", sf_dir)
-    src_dir, ckpt_dir = f"{base}/src", f"{base}/ckpt"
-    os.makedirs(src_dir)
-    events_file, _ = _staged_events_file(spark, sf_dir)
-    shutil.copy(events_file, f"{src_dir}/events.parquet")
-
-    stream = (
-        spark.readStream.schema(EVENTS_STAGED_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src_dir)
-    )
+    ckpt_dir = f"{base}/ckpt"
+    stream = _replay_stream(spark, sf_dir, base, heartbeats=0)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
     )
-    with _stream_partitions(spark, STREAM_JOIN_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .queryName(name)
-            .start()
-        )
-        q.awaitTermination()
+    writer = agg.writeStream.outputMode("append").format("noop").option("checkpointLocation", ckpt_dir)
+    _drain(spark, writer, "q178_state_query", STREAM_STATE_PARTITIONS)
     state = spark.read.format("statestore").load(ckpt_dir)
     return state.select(
         F.date_format("key.window.start", TS_FMT_SPARK).alias("win_start"),
@@ -968,28 +863,8 @@ def q182_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon; the heartbeat's own session never closes, so the sentinel
     stays out of the sink by construction and the drained result is
     exactly the batch sessionization -- ORACLE_Q62 verbatim."""
-    import datetime
-    import os
-    import shutil
-    import tempfile
-    import time
-
     name = "q182_session_result"
-    _stop_active(spark, name)
-
-    base = _run_base("q182_session", sf_dir)
-    os.makedirs(base)
-    events_file, max_ts = _staged_events_file(spark, sf_dir)
-    now = time.time()
-    _stage_events_copy(events_file, f"{base}/events.parquet", now - 300)
-    _write_sentinel(spark, base, "heartbeat1", max_ts + datetime.timedelta(days=1), mtime=now - 200)
-
-    stream = (
-        spark.readStream.schema(EVENTS_STAGED_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(base)
-    )
+    stream = _replay_stream(spark, sf_dir, _run_base("q182_session", sf_dir), heartbeats=1)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
@@ -1002,15 +877,8 @@ def q182_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with _stream_partitions(spark, STREAM_JOIN_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, agg.writeStream.outputMode("append").format("memory"), name,
+           STREAM_STATE_PARTITIONS)
     return spark.table(name)
 
 
@@ -1040,13 +908,7 @@ def q180_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both facts are hash-checked, which pins the two things UPDATE mode
     promises: no missed change, no spurious re-emission of unchanged
     groups."""
-    import os
-    import shutil
-    import tempfile
-
     name = "q180_update_result"
-    _stop_active(spark, name)
-
     base = _run_base("q180_update", sf_dir)
     src_dir = f"{base}/src"
     os.makedirs(src_dir)
@@ -1081,15 +943,8 @@ def q180_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(
         F.window("ts", "15 minutes").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
-    with _stream_partitions(spark, STREAM_JOIN_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, agg.writeStream.outputMode("update").format("memory"), name,
+           STREAM_STATE_PARTITIONS)
     updates = spark.table(name)
     return updates.groupBy(
         F.date_format("w.start", TS_FMT_SPARK).alias("win_start"), "event_type"
@@ -1147,9 +1002,6 @@ def _upsert_merge_batch(
     the last applied id. The publish itself is a crash-atomic symlink swap
     (_publish_state) -- state_dir always resolves to a COMPLETE version.
     Module-level (not a closure) so tests can drive a replay directly."""
-    import os
-    import shutil
-
     _recover_state_pointer(base, state_dir)
     ledger = f"{state_dir}/_applied_batch_id"
     if os.path.exists(ledger):
@@ -1186,9 +1038,6 @@ def _recover_state_pointer(base: str, state_dir: str) -> None:
     every later call no-ops past it -- _publish_state therefore sweeps
     stale ``.legacy`` dirs on every publish as well, and any survivor here
     is gone by the next merged batch."""
-    import os
-    import shutil
-
     if os.path.lexists(state_dir) or not os.path.isdir(base):
         return
     best, best_id = None, -1
@@ -1233,9 +1082,6 @@ def _publish_state(base: str, state_dir: str, new_dir: str) -> None:
     also removes any ``.legacy`` version whose ledger is below the one
     just published -- the leak window now closes at the next batch instead
     of never."""
-    import os
-    import shutil
-
     prev = os.readlink(state_dir) if os.path.islink(state_dir) else None
     if prev is None and os.path.isdir(state_dir):
         # Migrate a pre-symlink plain state directory (the old
@@ -1298,13 +1144,6 @@ def q175_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     undercounts; a replayed one, by idempotence, cannot overcount).
     State/checkpoint live at deterministic per-sf paths, reset per
     invocation (q170's rule)."""
-    import os
-    import shutil
-    import tempfile
-
-    name = "q175_upsert_query"
-    _stop_active(spark, name)
-
     base = _run_base("q175_upsert", sf_dir)
     src_dir, state_dir, ckpt_dir = f"{base}/src", f"{base}/state", f"{base}/ckpt"
 
@@ -1325,15 +1164,8 @@ def q175_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "*.parquet")
         .parquet(src_dir)
     )
-    with _stream_partitions(spark, STREAM_JOIN_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .queryName(name)
-            .start()
-        )
-        q.awaitTermination()
+    writer = stream.writeStream.foreachBatch(merge_batch).option("checkpointLocation", ckpt_dir)
+    _drain(spark, writer, "q175_upsert_query", STREAM_STATE_PARTITIONS)
     state = spark.read.parquet(state_dir)
     return state.select(
         "user_id",
@@ -1395,7 +1227,6 @@ def q212_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load as load_table
 
     name = "q212_pit_result"
-    _stop_active(spark, name)
     versions = F.explode(
         F.sequence(F.lit(0), F.lit(PIT_VERSIONS - 1))
     ).alias("v")
@@ -1430,11 +1261,7 @@ def q212_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("cents").cast("decimal(30,0)")).cast("bigint").alias("sum_cents"),
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(spark, agg.writeStream.outputMode("complete").format("memory"), name)
     return spark.table(name)
 
 
@@ -1494,8 +1321,6 @@ def _stage_day_shards(spark: SparkSession, ev_with_day: DataFrame, dst_dir: str)
     0-row shard either breaks the part-file lookup or produces an empty
     micro-batch that silently shifts the n_batches evidence. Returns the
     staged paths (mtime order = replay order)."""
-    import shutil
-
     lo, hi = ev_with_day.agg(F.min("day"), F.max("day")).first()
     span = hi - lo + 1
     staged: list[str] = []
@@ -1507,7 +1332,7 @@ def _stage_day_shards(spark: SparkSession, ev_with_day: DataFrame, dst_dir: str)
         )
         shard_tmp = f"{dst_dir}/_build{k}"
         shard.coalesce(1).write.parquet(shard_tmp)
-        parts = [f for f in _os.listdir(shard_tmp) if f.endswith(".parquet")]
+        parts = [f for f in os.listdir(shard_tmp) if f.endswith(".parquet")]
         if parts and spark.read.parquet(f"{shard_tmp}/{parts[0]}").limit(1).count() > 0:
             dst = f"{dst_dir}/shard-{k}.parquet"
             shutil.move(f"{shard_tmp}/{parts[0]}", dst)
@@ -1534,12 +1359,6 @@ def q220_incremental_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is the nightly-incremental pattern (state carries,
     arrivals stream in); complete-mode memory sink at test SF, a keyed
     state store + changelog sink in production."""
-    import os
-    import shutil
-    import tempfile
-
-    name = "q220_incr_result"
-    _stop_active(spark, name)
     base = _run_base("q220_incr", sf_dir)
     os.makedirs(base)
 
@@ -1558,14 +1377,9 @@ def q220_incremental_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("sum_cents"),
     )
-    q = (
-        agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-        n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    finally:
-        q.stop()
+    name = "q220_incr_result"
+    q = _drain(spark, agg.writeStream.outputMode("complete").format("memory"), name)
+    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
     return spark.table(name).select(
         "event_type",
         "n_events",
@@ -1612,12 +1426,12 @@ def _cms_merge_batch(
     makes replays exactly-once."""
     _recover_state_pointer(base, state_dir)
     ledger = f"{state_dir}/_applied_batch_id"
-    if _os.path.exists(ledger):
+    if os.path.exists(ledger):
         with open(ledger) as fh:
             if batch_id <= int(fh.read().strip()):
                 return
     inc = _cms_batch_cells(bdf)
-    if _os.path.exists(state_dir):
+    if os.path.exists(state_dir):
         inc = (
             spark.read.parquet(state_dir)
             .unionByName(inc)
@@ -1648,18 +1462,12 @@ def q238_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     hitters -- per-batch increments are at most d*w rows regardless of
     batch size, state is d*w counters forever, and the exact
     per-key pass exists only for the audit."""
-    import shutil
-    import tempfile
-
     from ..operators._hashing import MINHASH_SEEDS, minhash
     from ..operators.profiling import CMS_D, CMS_TOPK, CMS_W
 
-    name = "q238_stream_cms"
-    _stop_active(spark, name)
     base = _run_base("q238_cms", sf_dir)
-    _os.makedirs(base)
     src = f"{base}/src"
-    _os.makedirs(src)
+    os.makedirs(src)
 
     ev = load(spark, sf_dir, "events").withColumn(
         "day", F.expr("unix_micros(ts) DIV 86400000000")
@@ -1673,19 +1481,11 @@ def q238_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = (
-        stream.writeStream.queryName(name)
-        .foreachBatch(
-            lambda bdf, bid: _cms_merge_batch(spark, base, state_dir, bdf, bid)
-        )
-        .option("checkpointLocation", f"{base}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    finally:
-        q.stop()
+    writer = stream.writeStream.foreachBatch(
+        lambda bdf, bid: _cms_merge_batch(spark, base, state_dir, bdf, bid)
+    ).option("checkpointLocation", f"{base}/ckpt")
+    q = _drain(spark, writer, "q238_stream_cms")
+    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
 
     cells = spark.read.parquet(state_dir)
     counts = (

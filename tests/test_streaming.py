@@ -293,6 +293,29 @@ def test_checkpoint_restart_no_reprocessing(spark, tmp_path):
     assert spark.read.parquet(out).count() == 3
 
 
+def test_drain_wait_is_bounded(spark, tmp_path, monkeypatch):
+    """windows._drain never waits past DRAIN_TIMEOUT_S: a drain that
+    outlives it raises TimeoutError instead of handing back a partly
+    drained table, the query is stopped, and the shuffle-partition pin is
+    restored."""
+    from hive_ddl_extract_tool_spark.streaming import windows
+
+    d = str(tmp_path / "drain_src")
+    _write_batch(spark, d, 1, [("2024-01-01 10:00:00", 1, 1.0)])
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+        .parquet(d)
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setattr(windows, "DRAIN_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        windows._drain(spark, stream.writeStream.format("memory"), "drain_bound_test", partitions=3)
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
 def test_rocksdb_state_store_provider(spark, tmp_path):
     """The state backend a 100 TB deployment actually runs: RocksDB spills
     streaming-aggregation state to local disk instead of holding every key
@@ -412,10 +435,10 @@ def test_upsert_sink_ran_multiple_batches_and_counts_every_event(spark, sf_dir):
     sum to the full event count (a lost batch undercounts; a double-applied
     one would overcount -- idempotence is what keeps it exact)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from hive_ddl_extract_tool_spark.operators._cache import scratch_dir
     from hive_ddl_extract_tool_spark.streaming.windows import (
         UPSERT_SRC_FILES,
         q175_stream_upsert_sink,
@@ -426,8 +449,7 @@ def test_upsert_sink_ran_multiple_batches_and_counts_every_event(spark, sf_dir):
     total = out.agg(F.sum("n_events")).collect()[0][0]
     assert total == load(spark, sf_dir, "events").count()
 
-    sf_tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    ckpt = os.path.join(tempfile.gettempdir(), f"q175_upsert_{sf_tag}", "ckpt", "commits")
+    ckpt = os.path.join(scratch_dir("q175_upsert", sf_dir), "ckpt", "commits")
     commits = [f for f in os.listdir(ckpt) if f.isdigit()]
     assert len(commits) >= UPSERT_SRC_FILES, commits
 

@@ -100,7 +100,8 @@ Usage:
 
 Each run prints one JSON row per check and a summary line, writes the
 summary with every row to --out, and exits nonzero on any failed row.
-SPARK_GRAFT_CPUS sets local[N] (default 32).
+SPARK_GRAFT_CPUS sets local[N] (default: the host's CPU count, as for every
+session built by hive_ddl_extract_tool_spark.session).
 """
 
 from __future__ import annotations
@@ -787,9 +788,9 @@ def main(argv: list[str] | None = None) -> int:
         tables({k: getattr(args, f"k{k}") for k in (1, 3, 10, 30)})
         return 0
 
-    from hive_ddl_extract_tool_spark.session import get_spark
+    from hive_ddl_extract_tool_spark.session import default_parallelism, get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     # local mode runs every executor thread inside the driver JVM, so the
     # driver heap is the executor memory here
     spark = get_spark(app_name=f"scale-{args.cmd}", cpus=cpus, shuffle_partitions=cpus,
