@@ -17,9 +17,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-from hive_ddl_extract_tool_spark.operators import all_oracles, all_queries
+from hive_ddl_extract_tool_spark.operators import all_oracles, latest_green, sweep_order
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,8 +32,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2B."""
-    return all_queries()
+    """One entry per implemented operator from SURVEY.md §2B, in the sweep
+    order generated from this checkout's CORRECTNESS_r{N}.json history."""
+    return sweep_order(latest_green(HERE)[0])
 
 
 def oracle_sql() -> dict[str, str]:

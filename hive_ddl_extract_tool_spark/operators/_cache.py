@@ -76,7 +76,7 @@ def cached_df(spark: SparkSession, key: str, builder: Callable[[], DataFrame]) -
     built = builder()
     built.write.mode("overwrite").parquet(stage_dir)
     # Read back with the builder's schema stated explicitly: a schema-less
-    # read runs a footer-inference JOB first (r15; same fix as
+    # read runs a footer-inference JOB first (same fix as
     # tables._read_parquet_cached_schema), and the staged files were just
     # written from exactly this schema.
     df = spark.read.schema(built.schema).parquet(stage_dir)

@@ -74,15 +74,8 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, cache: bool = False) -> Data
     the raw stream and its verify off the candidate-only q42_dsc stage, so
     nothing corpus-sized is written per session on that path.
 
-    r15 note: a doc_id-BUCKETED staged table (guide §2.4) was built and
-    measured here -- it provably removes three consumer-side Exchanges
-    (MinHash groupBy, verify sizes, verify join big side) -- but the
-    bucketed saveAsTable write+readback cost q42 +2.3 s at sf0.1 against
-    the parquet stage (interleaved 12-run A/B, bias-corrected), so it was
-    rejected and the plain parquet stage kept; see OPTIMIZATION_r15.md
-    §E4 for the numbers and the conditions under which the bucketed
-    variant wins (many consumers per staging, artifact >> exchange
-    overhead)."""
+    A doc_id-bucketed stage was measured and rejected (OPTIMIZATION_r15.md
+    §E4: when the bucketed variant would win)."""
 
     def build() -> DataFrame:
         return _doc_shingles_raw(spark, sf_dir).distinct()
@@ -109,19 +102,10 @@ def _doc_shingles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r16 measured-and-REJECTED: a per-doc hash-ARRAY pipeline (transform(sharr,
-# h60) + array_min/array_distinct reductions) that made the MinHash signature
-# a pure projection with zero exchanges. Interleaved A/B at sf0.1: q41
-# 2.5 -> 10.6 s, q42 5.3 -> 32 s (probes idle, so real). Two causes, both
-# visible in the captured plan: (a) higher-order functions are
-# CodegenFallback -- every md5 ran interpreted instead of inside
-# WholeStageCodegen; (b) the emptiness filter (size(hms) > 0) was pushed
-# below the projections, duplicating the whole split/shingle/md5 pipeline
-# into the Filter with the split re-inlined per element_at access (the
-# O(words^2) pathology _doc_shingles_raw's materialized word array exists to
-# avoid). The exploded row stream + codegen'd groupBy stays the right shape
-# for corpus-sized hashing; per-row HOF signatures remain correct where rows
-# are few and codegen is unavailable anyway (the q131 streaming arm).
+# Corpus-sized hashing stays an exploded row stream + codegen'd groupBy: an
+# array-HOF MinHash was measured 4x slower (OPTIMIZATION_r16.md §E2). Per-row
+# HOF signatures remain right where rows are few and codegen is unavailable
+# anyway (the q131 streaming arm).
 
 
 # DuckDB twin of _doc_shingles
@@ -181,12 +165,9 @@ def q41_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Built from the RAW shingle stream (no distinct): min() is insensitive to
     duplicate shingles, so the usual dedup shuffle is skipped entirely and
     the only exchange carries map-side-combined partial minima -- one row
-    per (doc, partition), constant in document length. (Two rejected r16
-    variants, both measured: a zero-exchange array-HOF build, 4x slower --
-    see the note above q40 -- and a repartition("doc_id")-before-tokenize
-    fold, neutral at sf0.1 (+0.03 s, controls ±0.2) while shipping raw
-    text through its one exchange instead of the partial minima, which is
-    strictly more bytes at any real scale.)"""
+    per (doc, partition), constant in document length. Rejected variants:
+    OPTIMIZATION_r16.md §E2 (array-HOF) and §E3 (repartition-before-tokenize,
+    which ships raw text through its exchange instead of partial minima)."""
     return _minhash_from_shingles(_doc_shingles_raw(spark, sf_dir))
 
 

@@ -45,18 +45,14 @@ def _ensure_session_defaults(spark: SparkSession) -> None:
 
 
 # (app_id, path, mtime_ns, size) -> StructType. Every schema-less
-# spark.read.parquet() runs a footer-inference JOB before the query proper
-# (visible as the "parquet at" jobs in the event log, ~40-80 ms each on
-# local[32]); a bench/driver sweep re-loads the same 10 immutable fixture
-# files hundreds of times, so r15 caches the inferred schema per session and
-# passes it explicitly -- later loads skip the inference job entirely
-# (measured r16: 41 -> 2 "parquet at" jobs per headline sweep). App-scoped
-# on purpose: a new session re-infers from the files. The file's
-# (mtime_ns, size) is part of the key (r16, ADVICE): replacing a fixture
-# mid-session re-infers instead of serving the dead file's schema, at the
-# cost of one os.stat per load; entries from other app ids are evicted on
-# insert, mirroring operators/_cache.py, so long processes that restart
-# sessions do not accumulate stale schemas.
+# spark.read.parquet() runs a footer-inference JOB before the query proper,
+# and a sweep re-loads the same fixture files hundreds of times, so the
+# inferred schema is cached per session and passed explicitly (measurements:
+# OPTIMIZATION_r15.md §C6, OPTIMIZATION_r16.md §E6). App-scoped on purpose: a
+# new session re-infers from the files. (mtime_ns, size) in the key makes a
+# fixture replaced mid-session re-infer instead of serving the dead file's
+# schema; entries from other app ids are evicted on insert, mirroring
+# operators/_cache.py.
 _SCHEMAS: dict[tuple[str, str, int, int], object] = {}
 
 
@@ -78,19 +74,17 @@ def _infer_schema_driver_side(path: str):
     """Parquet schema via a DRIVER-SIDE footer read (pyarrow) converted
     with Spark's own Arrow mapping -- no Spark job at all, where a
     schema-less spark.read.parquet runs one. Verified bit-equal to Spark's
-    inference for every fixture table at every SF (r15: 30/30 schemas,
-    incl. timestamp_ntz and array<double>). Returns None on any surprise
-    so the caller falls back to a normal inference read.
+    inference for every fixture table at every SF (30/30 schemas, incl.
+    timestamp_ntz and array<double>). Returns None on any surprise so the
+    caller falls back to a normal inference read.
 
-    Scope guard (r16, ADVICE): this path only ever serves tables.load(),
-    i.e. the 10 immutable fixture tables above -- the verified allowlist.
-    events, the one table that HAS shipped multiple encodings (and where
-    the arrow mapping would silently diverge under nanosAsLong), is pinned
-    to driver_side_infer=False at both call sites. A future fixture with a
-    new encoding re-enters this function only via a changed file, which
-    the (mtime, size) cache key surfaces as a fresh inference -- still
-    through the same arrow mapping, so any NEW divergent encoding must be
-    added to the exempt list exactly as events was."""
+    Scope guard: this path only serves tables.load(), i.e. the immutable
+    fixture tables above -- the verified allowlist. events, the one table that has
+    shipped multiple encodings (and where the arrow mapping would silently
+    diverge under nanosAsLong), is pinned to driver_side_infer=False at
+    both call sites. A changed file re-enters here through the same arrow
+    mapping, so any NEW divergent encoding must be added to the exempt list
+    exactly as events was."""
     try:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema

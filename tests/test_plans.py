@@ -45,17 +45,19 @@ PYTHON_OK = {
 SKIP_PLAN_AUDIT = {"q63_stream_tumbling", "q64_stream_dedup", "q70_stream_static_join", "q98_stream_sessionize", "q107_stream_interval_join", "q131_stream_dedup_gate", "q140_stream_outer_join", "q170_stream_file_sink", "q175_stream_upsert_sink", "q178_state_store_reader", "q180_stream_update_mode", "q182_stream_session_window", "q212_stream_pit_enrich", "q220_incremental_equivalence", "q238_stream_cms"}
 
 
-def test_priority_names_exist():
-    """Every _PRIORITY entry must name a registered query and appear once:
-    a silent miss (all_queries() skips unknown names) would drop a query
-    from its sweep-priority slot with no failure -- the same drift class
-    the SKIP_PLAN_AUDIT guard below exists for."""
-    from hive_ddl_extract_tool_spark.operators import _PRIORITY
+def test_priority_names_exist(monkeypatch):
+    """Every REWRITTEN entry must name a registered query and appear once,
+    and all_queries() must refuse an unknown name at once: a silent miss
+    would drop a query from its sweep-priority slot with no failure -- the
+    same drift class the SKIP_PLAN_AUDIT guard below exists for."""
+    from hive_ddl_extract_tool_spark import operators
 
-    unknown = set(_PRIORITY) - QUERIES.keys()
-    assert not unknown, f"_PRIORITY names unregistered queries: {unknown}"
-    dupes = {n for n in _PRIORITY if _PRIORITY.count(n) > 1}
-    assert not dupes, f"_PRIORITY lists names twice: {dupes}"
+    unknown = set(operators.REWRITTEN) - QUERIES.keys()
+    assert not unknown, f"REWRITTEN names unregistered queries: {unknown}"
+    assert len(set(operators.REWRITTEN)) == len(operators.REWRITTEN), operators.REWRITTEN
+    monkeypatch.setattr(operators, "REWRITTEN", ("q_not_registered",))
+    with pytest.raises(ValueError, match="q_not_registered"):
+        operators.all_queries()
 
 
 def test_skip_plan_audit_names_exist():

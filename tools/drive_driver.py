@@ -1,7 +1,7 @@
 """Simulate the driver's verify at sf0.01 through __spark_entry__ only.
 
     python tools/drive_driver.py               # full sweep, rewrites PARITY.md
-    python tools/drive_driver.py --prefix 50   # the staged prefix only
+    python tools/drive_driver.py --prefix 50   # the first 50 in sweep order only
 
 Every query with an oracle goes through the shared oracle check
 (hive_ddl_extract_tool_spark/verify.py), whose TYPE-SENSITIVE canon makes a
@@ -12,10 +12,11 @@ the §2A catalog fixpoint, and records PARITY.md: the exact duckdb version,
 parquet physical types and per-query status, so a driver-sweep discrepancy
 can be diffed against what this environment saw.
 
-``--prefix N`` runs only the first N queries in registry order and writes
+``--prefix N`` runs only the first N queries of queries() and writes
 nothing. The external driver sweeps queries() in that order under a
 wall-clock budget (~200 s has historically yielded ~50 rows), so its
-PREFIX line is the measured cost of the staged _PRIORITY rotation.
+PREFIX line is the measured cost of the sweep order generated from the
+CORRECTNESS history (operators.sweep_order).
 
 The corpus is $SPARK_GRAFT_VERIFY_SF_DIR (default: the sf0.01 testdata).
 """

@@ -2,8 +2,9 @@
 
 The external driver sweeps ``__spark_entry__.queries()`` in dict order under
 a ~50-query wall-clock budget, so a query's correctness evidence refreshes
-only when the rotation rule (operators/__init__.py) promotes it into the
-prefix. This tool turns that rule from documentation into a check:
+only when it lands in the prefix. That order is generated from the
+CORRECTNESS history by ``operators.sweep_order``; this tool checks the
+generated order:
 
 - ``--report``: per-query latest-green driver round and age, grouped.
 - gate (default): simulate the NEXT sweep over the current registry order
@@ -11,54 +12,37 @@ prefix. This tool turns that rule from documentation into a check:
   the coming round with its latest green row more than MAX_AGE rounds old
   (never-checked oracle-backed queries outside the prefix fail outright).
 
-"Green" is the driver's hard signal: rows_match & schema_match & hash_match
-and no err. Rows-only queries (err == 'no_oracle', the declared q51/q52
-pair) are exempt -- the driver records only that they ran; their evidence
-lives in the hash-verified twins.
+"Green" is the driver's hard signal (``operators.latest_green``). Rows-only
+queries (err == 'no_oracle', the declared q51/q52 pair) are exempt -- the
+driver records only that they ran; their evidence lives in the
+hash-verified twins.
 
 The budget is a query COUNT stand-in for the driver's wall-clock budget.
-The historical sweeps landed ~50 queries/round, so the gate assumes 45 --
-BELOW the worst observed sweep length, because the gate credits every
-prefix query with a fresh row next sweep: an optimistic budget would let
-a stale query parked at position 46-50 silently age past the limit when
-the wall clock truncates early (exactly how q190 was missed in r7). Run
-in the round checklist via tests/test_freshness.py, or directly:
+The historical sweeps landed ~50 queries/round (DRIVER_SWEEP), so the gate
+assumes 45 -- BELOW the worst observed sweep length, because the gate
+credits every prefix query with a fresh row next sweep: an optimistic
+budget would let a stale query parked at position 46-50 silently age past
+the limit when the wall clock truncates early. Run in the round checklist
+via tests/test_freshness.py, or directly:
 
-    python tools/freshness.py [--budget 45] [--max-age 5] [--report]
+    python tools/freshness.py [--report]
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
-import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from hive_ddl_extract_tool_spark.operators import all_oracles, latest_green
+
 BUDGET = 45
 MAX_AGE = 5
-
-
-def latest_green() -> tuple[dict[str, int], int]:
-    """(query -> latest round with a green driver row, latest round seen)."""
-    latest: dict[str, int] = {}
-    last_round = 0
-    for f in sorted(glob.glob(f"{REPO}/CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        last_round = max(last_round, rnd)
-        for q, v in json.load(open(f)).items():
-            if (
-                v.get("rows_match")
-                and v.get("schema_match")
-                and v.get("hash_match")
-                and not v.get("err")
-            ):
-                latest[q] = max(latest.get(q, 0), rnd)
-    return latest, last_round
+DRIVER_SWEEP = 50  # queries per round the driver's wall clock has measured
 
 
 def registry() -> tuple[list[str], set[str]]:
@@ -68,25 +52,28 @@ def registry() -> tuple[list[str], set[str]]:
     return list(entry.queries()), set(entry.oracle_sql())
 
 
-def evaluate(budget: int = BUDGET, max_age: int = MAX_AGE) -> dict:
-    """Simulate the next driver sweep; list oracle-backed queries whose
-    evidence would exceed max_age rounds after it."""
-    green, last_round = latest_green()
-    order, backed = registry()
+def evaluate(history: tuple[dict[str, int], int] | None = None, order: list[str] | None = None) -> dict:
+    """Simulate the next driver sweep over ``order`` (default: the driver
+    contract's) given ``history`` = (latest green round per query, latest
+    round seen) (default: the committed CORRECTNESS files); list
+    oracle-backed queries whose evidence would exceed MAX_AGE rounds after
+    it."""
+    green, last_round = history or latest_green(REPO)
+    order, backed = registry() if order is None else (order, set(all_oracles()))
     next_round = last_round + 1
-    prefix = set(order[:budget])
+    prefix = set(order[:BUDGET])
     stale, never = [], []
     for q in order:
         if q not in backed or q in prefix:
             continue  # rows-only exempt; prefix gets a fresh row next sweep
         if q not in green:
             never.append(q)
-        elif next_round - green[q] > max_age:
+        elif next_round - green[q] > MAX_AGE:
             stale.append((q, green[q], next_round - green[q]))
     return {
         "next_round": next_round,
-        "budget": budget,
-        "max_age": max_age,
+        "budget": BUDGET,
+        "max_age": MAX_AGE,
         "n_registry": len(order),
         "n_oracle_backed": len(backed & set(order)),
         "never_checked_outside_prefix": never,
@@ -97,13 +84,11 @@ def evaluate(budget: int = BUDGET, max_age: int = MAX_AGE) -> dict:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--budget", type=int, default=BUDGET)
-    ap.add_argument("--max-age", type=int, default=MAX_AGE)
     ap.add_argument("--report", action="store_true")
     args = ap.parse_args()
 
     if args.report:
-        green, last_round = latest_green()
+        green, last_round = latest_green(REPO)
         order, backed = registry()
         by_age: dict[int, list[str]] = {}
         for q in order:
@@ -117,7 +102,7 @@ def main() -> int:
             print("   " + " ".join(by_age[age]))
         return 0
 
-    res = evaluate(args.budget, args.max_age)
+    res = evaluate()
     print(json.dumps(res, indent=1))
     return 0 if res["ok"] else 1
 
