@@ -79,11 +79,9 @@ def scenario_script(workdir: str) -> str:
         import sys; sys.path.insert(0, {REPO!r})
         import os
         os.chdir({workdir!r})   # derby metastore_db lands here
-        from pyspark.sql import SparkSession
-        spark = (SparkSession.builder.master("local[2]")
-                 .config("spark.sql.warehouse.dir", {workdir!r} + "/wh")
-                 .config("spark.ui.enabled", "false")
-                 .enableHiveSupport().getOrCreate())
+        from hive_ddl_extract_tool_spark.session import get_spark
+        spark = get_spark(cpus=2, enable_hive=True,
+                          extra_conf={{"spark.sql.warehouse.dir": {workdir!r} + "/wh"}})
         spark.sparkContext.setLogLevel("ERROR")
         assert spark.conf.get("spark.sql.catalogImplementation") == "hive"
         spark.sql("CREATE DATABASE hv")
