@@ -14,17 +14,23 @@ class-data-sharing (AppCDS) archive, which JDK 17 cannot create on its own
 (``-XX:+AutoCreateSharedArchive`` is JDK 19+):
 
 - The archive is ``${XDG_CACHE_HOME:-~/.cache}/hive_ddl_extract_tool_spark/
-  <key>-{hive|mem}.jsa``, one per catalog mode. The key hashes the ``java``
-  binary, the Spark version and the ``$SPARK_HOME/jars`` listing, so a JDK
-  or Spark upgrade records a new archive and the old one is deleted. To
-  reset it, delete that directory.
+  <key>-{hive|mem}.jsa``, one per catalog mode, 170-210 MB each. The key
+  hashes the ``java`` binary, the Spark version and the
+  ``$SPARK_HOME/jars`` listing, so a JDK or Spark upgrade records a new
+  archive and the old one is deleted. To reset it, delete that
+  directory. Every caller of ``get_spark`` shares it, the test suite and
+  ``tools/catalog_parity.py`` included, so the first of them to run on a
+  machine records it.
 - The first session of a mode records it (``-XX:ArchiveClassesAtExit``).
-  It starts a few seconds slower, and at exit Python waits ~20 s while
-  the JVM dumps 140-200 MB. The dump goes to a temporary file that becomes
-  the archive only if the JVM exited 0, because a truncated archive
-  crashes the next JVM at start. Later sessions map it
+  It starts 5-8 s slower, and at exit Python waits ~19 s (up to
+  ``DUMP_TIMEOUT_S``) while the JVM writes the archive. The dump goes to
+  a temporary file that becomes the archive only if the JVM exited 0,
+  because a truncated archive crashes the next JVM at start; a caller
+  that kills the JVM sooner (``perfbench`` waits 30 s) publishes nothing,
+  and the next session records again. Later sessions map it
   (``-XX:SharedArchiveFile``); one the JVM cannot use only falls back to a
-  normal start.
+  normal start. The flag a session got is in its
+  ``spark.driver.extraJavaOptions``.
 - The JDK refuses to record with a non-empty directory on the class path,
   and Spark puts its conf dir there. So the archive is used only when the
   conf dir holds nothing but ``*.template`` files (the launch then points
@@ -32,9 +38,15 @@ class-data-sharing (AppCDS) archive, which JDK 17 cannot create on its own
   reads) and no other directory can join the class path
   (``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``, ``SPARK_DIST_CLASSPATH``,
   ``PYSPARK_SUBMIT_ARGS`` and ``spark.driver.extraClassPath`` unset). A
-  ``hive-site.xml`` or ``spark-defaults.conf`` in the conf dir turns it off.
+  ``hive-site.xml`` or ``spark-defaults.conf`` in the conf dir turns it
+  off. A ``hive-site.xml`` in the directory named by ``HIVE_CONF_DIR``
+  does not: Hive's client reads it from there when the class path has
+  none, so that is how a run reaches an existing metastore and keeps the
+  archive (Spark then takes its own warehouse dir from
+  ``spark.sql.warehouse.dir``, not from that file).
 - A driver launched by ``spark-submit`` never uses it: its JVM is up
-  before Python runs.
+  before Python runs. That includes the kerberized setup in the README,
+  which needs ``HADOOP_CONF_DIR`` too.
 """
 
 from __future__ import annotations
@@ -49,7 +61,7 @@ import subprocess
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-# Seconds a recording session's exit waits for the JVM's dump (~20 s).
+# Seconds a recording session's exit waits for the JVM's dump (~19 s).
 DUMP_TIMEOUT_S = 120
 
 

@@ -1,7 +1,8 @@
 """The JVM start-up archive of `session.get_spark` (see its module
 docstring): the first session records it, later ones map it, one the JVM
 rejects only costs the speed-up, a JVM that did not exit cleanly publishes
-nothing, and a real file in the conf dir turns it off. Each session runs in
+nothing, and a real file in the conf dir turns it off while a metastore
+named by `HIVE_CONF_DIR` does not. Each session runs in
 its own process with its own `XDG_CACHE_HOME`, because the archive flag
 applies only to a JVM launched by that call."""
 
@@ -22,16 +23,17 @@ from hive_ddl_extract_tool_spark.session import _sweep, archive_key
 
 MARK = "ARCHIVE_PROBE "
 
-# One session on the in-memory catalog: a caller's own JVM option, a
-# partitioned table extracted, and what the JVM was started with. With
-# `kill`, the JVM is SIGKILLed before Python exits.
+# One session on the in-memory catalog (`hive`: a Hive metastore): a
+# caller's own JVM option, a partitioned table extracted, and what the JVM
+# was started with. With `kill`, the JVM is SIGKILLed before Python exits.
 SESSION = textwrap.dedent(f"""
     import json, os, signal, sys
     sys.path.insert(0, {REPO!r})
     from hive_ddl_extract_tool_spark.catalog.extractor import extract_ddl
     from hive_ddl_extract_tool_spark.session import get_spark
 
-    spark = get_spark(cpus=1, extra_conf={{"spark.driver.extraJavaOptions": "-Dprobe.x=1"}})
+    spark = get_spark(cpus=1, enable_hive="hive" in sys.argv,
+                      extra_conf={{"spark.driver.extraJavaOptions": "-Dprobe.x=1"}})
     jvm = spark._jvm
     pid = jvm.java.lang.ProcessHandle.current().pid()
     args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
@@ -59,12 +61,12 @@ def _conf_dir(path, files: dict[str, str]) -> str:
     return str(path)
 
 
-def _session(cache, conf_dir: str, workdir, *argv: str) -> dict:
+def _session(cache, conf_dir: str, workdir, *argv: str, **extra_env: str) -> dict:
     os.makedirs(workdir, exist_ok=True)
     env = {k: v for k, v in os.environ.items()
            if k not in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
-                        "PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT")}
-    env.update(XDG_CACHE_HOME=str(cache), SPARK_CONF_DIR=conf_dir)
+                        "PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT", "HIVE_CONF_DIR")}
+    env.update(XDG_CACHE_HOME=str(cache), SPARK_CONF_DIR=conf_dir, **extra_env)
     proc = subprocess.run([sys.executable, "-c", SESSION, *argv], cwd=workdir, env=env,
                           capture_output=True, text=True, timeout=300)
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith(MARK)]
@@ -165,6 +167,22 @@ def test_real_conf_file_turns_the_archive_off(tmp_path):
     assert run["conf"] == "42"
     assert run["probe_x"] == "1"
     assert not cache.exists()
+
+
+def test_hive_conf_dir_names_the_metastore_and_keeps_the_archive(tmp_path, templates_only):
+    # the way a run reaches an existing metastore without a conf-dir file
+    metastore = tmp_path / "metastore"
+    hive_conf = _conf_dir(tmp_path / "hive-conf", {"hive-site.xml": (
+        "<configuration><property><name>javax.jdo.option.ConnectionURL</name>"
+        f"<value>jdbc:derby:;databaseName={metastore};create=true</value>"
+        "</property></configuration>")})
+    cache = tmp_path / "cache"
+    run = _session(cache, templates_only, tmp_path / "w", "hive", "kill", HIVE_CONF_DIR=hive_conf)
+    assert len(run["cds"]) == 1 and run["cds"][0].startswith("-XX:ArchiveClassesAtExit=")
+    assert "-hive.jsa" in run["cds"][0]
+    assert "CREATE TABLE" in run["script"]
+    assert metastore.is_dir() and not (tmp_path / "w" / "metastore_db").exists()
+    assert _files(cache, ".jsa") == [] and _files(cache, ".tmp") == []
 
 
 def test_key_follows_jar_sizes(tmp_path):
