@@ -8,10 +8,10 @@ partition restore (MSCK REPAIR or ALTER TABLE ADD PARTITION). Here a single
 Hive-enabled SparkSession is both metastore client and SQL executor
 (`ExtractHiveDDL.java`'s three RPC paths collapse into the session: its
 catalog for names, metadata and partitions, and the SHOW CREATE TABLE
-command run directly for the DDL text; `spark.sql` only for datasource
-tables), and the script ordering is deterministic (the reference
-interleaves tables nondeterministically via parallelStream on a shared
-writer, ExtractHiveDDL.java:109).
+command's rendering, fed the metadata already fetched, for the DDL text;
+`spark.sql` only for datasource tables), and the script ordering is
+deterministic (the reference interleaves tables nondeterministically via
+parallelStream on a shared writer, ExtractHiveDDL.java:109).
 
 Reference parity notes (each function cites the behavior it re-expresses):
 
@@ -23,10 +23,12 @@ Reference parity notes (each function cites the behavior it re-expresses):
       only, `123`) is listed as the catalog stores it (123).
 - degrade-to-empty on table-list errors .. ExtractHiveDDL.java:146-148
 - DDL text (R4) .......................... HiveClient.java:82-92: the
-  table's metadata picks the form. Hive-serde tables and views: the
-  command SHOW CREATE TABLE ... AS SERDE plans to
-  (ShowCreateTableAsSerdeCommand), run directly; datasource tables: one
-  plain SHOW CREATE TABLE statement.
+  table's metadata picks the form. Hive-serde tables and views: the text
+  SHOW CREATE TABLE ... AS SERDE returns, rendered from the CatalogTable
+  the section already holds by the private method its command ends in
+  (ShowCreateTableAsSerdeCommand.showCreateHiveTable, see
+  get_create_ddl), so the text costs no metastore call; datasource
+  tables: one plain SHOW CREATE TABLE statement.
 - CREATE TABLE header quoting fixup ...... ExtractHiveDDL.java:154-191
 - partition strategy decision table ...... ExtractHiveDDL.java:205-252
     * default partition => MSCK .......... :212-218,233 (README.md:39-41)
@@ -36,7 +38,11 @@ Reference parity notes (each function cites the behavior it re-expresses):
   ExternalCatalog.getTable (shared with the DDL text) + one listPartitions
   per table (the reference's listPartitionNames + listPartitions),
   whatever the partition count; names built as SHOW PARTITIONS builds
-  them, locations as DESCRIBE prints them.
+  them, locations as DESCRIBE prints them. On the Hive catalog, by Spark's
+  own count of Hive client calls (HiveCatalogMetrics), a table or view
+  costs 1 call and a partitioned table 4 (HiveExternalCatalog's
+  listPartitions makes its own getTable + getRawHiveTable); the reference
+  makes 4 RPCs per table.
 - partition spec formatting k='v',k2='v2'  ExtractHiveDDL.java:263-276
     * deliberate deviation: values are path-unescaped (%XX) and SQL-escaped
       (' and \\), so dt='a:b' replays as 'a:b'; the reference quotes the
@@ -192,7 +198,7 @@ def list_databases(spark: SparkSession, pattern: str) -> list[str]:
     pattern into the metastore, which reads it differently (``x_[ab]*``
     matches nothing there)."""
     api = _jvm_api(spark._jvm)
-    return sorted(_seq(api.filter_pattern(_catalog(spark).listDatabases(), pattern)))
+    return sorted(_names(api.filter_pattern(_catalog(spark).listDatabases(), pattern)))
 
 
 def list_tables(spark: SparkSession, db: str, pattern: str) -> list[str]:
@@ -204,7 +210,7 @@ def list_tables(spark: SparkSession, db: str, pattern: str) -> list[str]:
     catalog = _catalog(spark)
     try:
         names = catalog.externalCatalog().listTables(catalog.format(db))
-        return sorted(_seq(api.filter_pattern(names, pattern)))
+        return sorted(_names(api.filter_pattern(names, pattern)))
     except Exception:
         return []
 
@@ -213,10 +219,15 @@ def get_create_ddl(spark: SparkSession, db: str, table: str, meta=None) -> str:
     """R4+R5+R6: fetch SHOW CREATE TABLE text, apply the header fixup, strip
     trailing whitespace, terminate with ';' (HiveClient.java:82-92,
     ExtractHiveDDL.java:154-175). The table's metadata picks the form:
-    Hive-serde tables and views get the `AS SERDE` text, from the command
-    that statement plans to (ShowCreateTableAsSerdeCommand), run directly;
     datasource tables, which `AS SERDE` rejects, get one plain SHOW CREATE
-    TABLE statement. ``meta`` is the table's CatalogTable when the caller
+    TABLE statement; Hive-serde tables and views get the `AS SERDE` text
+    from ShowCreateTableAsSerdeCommand's private showCreateHiveTable,
+    called on ``meta``. The command's public run() is that method preceded
+    by SessionCatalog.getTableRawMetadata, three metastore calls
+    (databaseExists, tableExists, getTable) that fetch ``meta`` again; the
+    private method holds the unsupported-feature check, the view branch
+    and the header (named from the command's identifier), so the text is
+    the statement's. ``meta`` is the table's CatalogTable when the caller
     has already fetched it."""
     meta = _table_metadata(spark, db, table) if meta is None else meta
     api = _jvm_api(spark._jvm)
@@ -224,7 +235,7 @@ def get_create_ddl(spark: SparkSession, db: str, table: str, meta=None) -> str:
         ddl = spark.sql(f"SHOW CREATE TABLE `{db}`.`{table}`").collect()[0][0]
     else:
         command = api.show_create_as_serde(api.table_identifier(table, api.some(db)), api.no_output)
-        ddl = command.run(spark._jsparkSession).head().getString(0)
+        ddl = api.show_create_hive_table.invoke(command, api.singleton_list(meta).toArray())
     lines = [fix_create_table(strip_catalog_prefix(line)) for line in ddl.splitlines()]
     return "\n".join(lines).rstrip() + ";"
 
@@ -235,14 +246,21 @@ def _jvm_api(jvm) -> SimpleNamespace:
     every step of a ``jvm.a.b.C`` lookup is a py4j round trip."""
     catalyst = jvm.org.apache.spark.sql.catalyst
     command = jvm.org.apache.spark.sql.execution.command
+    params = jvm.java.lang.reflect.Array.newInstance(jvm.java.lang.Class._java_lang_class, 1)
+    params[0] = catalyst.catalog.CatalogTable._java_lang_class
+    show_create_hive_table = command.ShowCreateTableAsSerdeCommand._java_lang_class.getDeclaredMethod(
+        "showCreateHiveTable", params)
+    show_create_hive_table.setAccessible(True)
     return SimpleNamespace(
         table_identifier=catalyst.TableIdentifier,
         some=jvm.scala.Some,
         none=jvm.scala.Option.empty(),
         no_output=jvm.org.apache.spark.api.python.PythonUtils.toSeq(jvm.java.util.ArrayList()),
+        singleton_list=jvm.java.util.Collections.singletonList,
         filter_pattern=catalyst.util.StringUtils.filterPattern,
         is_datasource_table=command.DDLUtils.isDatasourceTable,
         show_create_as_serde=command.ShowCreateTableAsSerdeCommand,
+        show_create_hive_table=show_create_hive_table,
         partition_path_string=catalyst.catalog.ExternalCatalogUtils.getPartitionPathString,
         uri_to_string=catalyst.catalog.CatalogUtils.URIToString,
     )
@@ -251,6 +269,13 @@ def _jvm_api(jvm) -> SimpleNamespace:
 def _seq(jseq) -> list:
     """A JVM Scala Seq as a Python list."""
     return [jseq.apply(i) for i in range(jseq.length())]
+
+
+def _names(jseq) -> list[str]:
+    """A JVM Seq of names as a Python list, in one round trip (the names
+    hold no NUL)."""
+    joined = jseq.mkString("\0")
+    return joined.split("\0") if joined else []
 
 
 def _catalog(spark: SparkSession):
@@ -280,8 +305,10 @@ def get_partitions(
     one listPartitions call per table (the reference's listPartitionNames +
     listPartitions, ExtractHiveDDL.java:199,207). Names are built as SHOW
     PARTITIONS builds them (``k=v/k2=v2``, each pair
-    ExternalCatalogUtils.getPartitionPathString); locations as DESCRIBE
-    prints them. ``meta`` is the table's CatalogTable when the caller has
+    ExternalCatalogUtils.getPartitionPathString; the one-call
+    PartitioningUtils.getPathFragment would cast numeric values, naming
+    an MSCK-discovered ``n=002`` ``n=2``); locations as DESCRIBE prints
+    them. ``meta`` is the table's CatalogTable when the caller has
     already fetched it. A table with no partition columns -> empty list;
     any other catalog error propagates. No 32767 cap (reference:
     Short.MAX_VALUE, ExtractHiveDDL.java:199)."""

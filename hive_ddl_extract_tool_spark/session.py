@@ -28,9 +28,12 @@ class-data-sharing (AppCDS) archive, which JDK 17 cannot create on its own
   because a truncated archive crashes the next JVM at start; a caller
   that kills the JVM sooner (``perfbench`` waits 30 s) publishes nothing,
   and the next session records again. Later sessions map it
-  (``-XX:SharedArchiveFile``); one the JVM cannot use only falls back to a
-  normal start. The flag a session got is in its
-  ``spark.driver.extraJavaOptions``.
+  (``-XX:SharedArchiveFile``). One the JVM cannot use falls back to a
+  normal start; the session then finds the archive missing from the
+  JVM's ``/proc/<pid>/maps`` and deletes it, so the next session records
+  a fresh one (the key cannot cover everything the JVM checks, such as
+  the base CDS archive of an updated JDK under an unchanged ``java``).
+  The flag a session got is in its ``spark.driver.extraJavaOptions``.
 - The JDK refuses to record with a non-empty directory on the class path,
   and Spark puts its conf dir there. So the archive is used only when the
   conf dir holds nothing but ``*.template`` files (the launch then points
@@ -166,7 +169,24 @@ class _Archive:
                 os.environ["SPARK_CONF_DIR"] = saved
         if self.tmp is not None:
             atexit.register(self._promote, SparkContext._gateway.proc)
+        else:
+            self._drop_if_unmapped(SparkContext._gateway.proc.pid)
         return spark
+
+    def _drop_if_unmapped(self, pid: int) -> None:
+        """Delete the archive if the JVM ``pid`` did not map it, so that the
+        next session records a fresh one. Skipped where ``/proc`` is
+        missing."""
+        try:
+            with open(f"/proc/{pid}/maps") as f:
+                mapped = self.final in f.read()
+        except OSError:
+            return
+        if not mapped:
+            try:
+                os.remove(self.final)
+            except FileNotFoundError:
+                pass
 
     def _promote(self, proc: subprocess.Popen) -> None:
         """End the JVM (it exits when its stdin closes), let it finish the

@@ -127,6 +127,11 @@ def ddl_fixtures(spark, tmp_path_factory):
     spark.sql(
         f"ALTER TABLE ddl_db1.part_conflict ADD PARTITION (dt='c') LOCATION '{base}/UPPER_TOO'"
     )
+    # mixed-case partition columns, one value the path escapes (a:b)
+    spark.sql("""CREATE TABLE ddl_db1.part_mixed (v INT, DT STRING, Region STRING)
+                 USING parquet PARTITIONED BY (DT, Region)""")
+    spark.sql("INSERT INTO ddl_db1.part_mixed PARTITION (DT='a:b', Region='emea') VALUES (1)")
+    spark.sql("INSERT INTO ddl_db1.part_mixed PARTITION (DT='c', Region='apac') VALUES (2)")
     for t in ("sales_2023", "sales_2024", "inv_2024"):
         spark.sql(f"CREATE TABLE ddl_db1.{t} (id INT) USING parquet")
     spark.sql("CREATE TABLE ddl_db2.other_t (id INT) USING parquet")
@@ -140,7 +145,7 @@ def test_list_databases_and_tables(spark, ddl_fixtures):
     assert list_tables(spark, "ddl_db1", "sales_*") == ["sales_2023", "sales_2024"]
     assert list_tables(spark, "ddl_db1", "*") == sorted(
         ["plain_t", "part_lower", "part_upper", "part_default", "part_conflict",
-         "sales_2023", "sales_2024", "inv_2024"]
+         "part_mixed", "sales_2023", "sales_2024", "inv_2024"]
     )
     # degrade-to-empty on a missing database (ExtractHiveDDL.java:146-148)
     assert list_tables(spark, "no_such_db", "*") == []
@@ -192,6 +197,27 @@ def test_bulk_listing_matches_sql_path(spark, ddl_fixtures):
     for db, table in tables:
         assert get_partitions(spark, db, table) == _sql_path_partitions(spark, db, table), table
         assert get_table_location(spark, db, table) == _describe_location(spark, f"`{db}`.`{table}`")
+
+
+def test_partition_names_keep_numeric_values_as_stored(spark, tmp_path):
+    """MSCK takes a numeric column's value from the directory name as is
+    (n=002), and SHOW PARTITIONS names the partition with it. (No SQL can
+    address that partition: a spec casts '002' to 2, so the bulk-listing
+    oracle above cannot describe it.) PartitioningUtils.getPathFragment
+    would name it n=2: it casts numeric values."""
+    spark.sql("CREATE DATABASE ddl_num")
+    try:
+        spark.sql(f"""CREATE TABLE ddl_num.t (v INT, n INT) USING parquet
+                      PARTITIONED BY (n) LOCATION '{tmp_path}/t'""")
+        spark.sql("INSERT INTO ddl_num.t PARTITION (n=7) VALUES (1)")
+        (tmp_path / "t" / "n=002").mkdir()
+        spark.sql("MSCK REPAIR TABLE ddl_num.t")
+        parts = get_partitions(spark, "ddl_num", "t")
+        shown = [r[0] for r in spark.sql("SHOW PARTITIONS ddl_num.t").collect()]
+        assert [name for name, _ in parts] == shown
+        assert parts[0][0] == "n=002" and parts[0][1].endswith("/t/n=002")
+    finally:
+        spark.sql("DROP DATABASE ddl_num CASCADE")
 
 
 @pytest.fixture(scope="module")

@@ -48,6 +48,7 @@ SESSION = textwrap.dedent(f"""
         "probe_x": jvm.java.lang.System.getProperty("probe.x"),
         "conf": spark.conf.get("spark.probe.conf", None),
         "script": extract_ddl(spark, "d", "*", None),
+        "pid": os.getpid(),
     }}), flush=True)
     if "kill" in sys.argv:
         os.kill(pid, signal.SIGKILL)
@@ -157,6 +158,16 @@ def test_stale_archive_falls_back_to_a_normal_start(miss, tmp_path, templates_on
     assert run["cds"] == [f"-XX:SharedArchiveFile={stale}"]
     assert str(stale) not in run["mapped"]
     assert run["script"] == first["script"]
+    # the rejected archive is deleted, the next session records a fresh
+    # one and the one after maps it
+    assert not stale.exists()
+    again = _session(tmp_path / "cache", templates_only, tmp_path / "w2")
+    assert again["cds"] == [f"-XX:ArchiveClassesAtExit={stale}.{again['pid']}.tmp"]
+    assert stale.is_file()
+    mapped = _session(tmp_path / "cache", templates_only, tmp_path / "w3")
+    assert mapped["cds"] == [f"-XX:SharedArchiveFile={stale}"]
+    assert str(stale) in mapped["mapped"]
+    assert mapped["script"] == first["script"]
 
 
 def test_real_conf_file_turns_the_archive_off(tmp_path):

@@ -105,7 +105,8 @@ def scenario_script(workdir: str) -> str:
         spark.sql("CREATE TABLE hv.ds (a INT, s STRING) USING parquet")
         spark.sql("CREATE VIEW hv.v AS SELECT a, dt FROM hv.t")
         from hive_ddl_extract_tool_spark.catalog.extractor import (
-            ExtractConfig, extract_ddl, get_create_ddl, list_databases, list_tables)
+            ExtractConfig, extract_ddl, get_create_ddl, list_databases, list_tables,
+            table_section)
         from tools.catalog_parity import (
             LISTING_PATTERNS, sql_path_databases, sql_path_ddl, sql_path_tables)
         hv_tables = list_tables(spark, "hv", "*")
@@ -122,6 +123,22 @@ def scenario_script(workdir: str) -> str:
             assert list_tables(spark, "hv", p) == sql_path_tables(spark, "hv", p), p
         assert list_databases(spark, "x_[ab]*") == ["x_a1", "x_b2"]
         assert list_tables(spark, "hv", "[bc]*") == ["bk", "cv"]
+
+        # metastore call budget, by Spark's own count of Hive client calls:
+        # a Hive-format table or view costs its one getTable (SHOW CREATE
+        # text is rendered from it); a partitioned one adds listPartitions,
+        # whose HiveExternalCatalog path makes its own getTable +
+        # getRawHiveTable before fetching the partitions
+        metrics = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+        client_calls = metrics.METRIC_HIVE_CLIENT_CALLS()
+        def hive_calls(f, *args):
+            before = client_calls.getCount()
+            f(*args)
+            return client_calls.getCount() - before
+        budget = {{"bk": 1, "cv": 1, "txt": 1, "v": 1, "e": 4, "t": 4}}
+        spent = {{t: hive_calls(table_section, spark, "hv", t, ExtractConfig()) for t in budget}}
+        assert spent == budget, spent
+        print("HIVE_CLIENT_CALLS", hive_calls(extract_ddl, spark, "hv", "*", None, ExtractConfig()))
 
         # statement budget: Hive-format tables and views issue no spark.sql,
         # the datasource table one plain SHOW CREATE TABLE
@@ -214,6 +231,8 @@ def run_fixpoint(workdir: str | None = None, timeout: int = 300) -> dict:
         if own_workdir:
             shutil.rmtree(workdir, ignore_errors=True)
     ok = "HIVE_METASTORE_OK" in proc.stdout
+    calls = next((ln.split()[1] for ln in proc.stdout.splitlines()
+                  if ln.startswith("HIVE_CLIENT_CALLS ")), "?")
     return {
         "ok": ok,
         "sec": round(time.monotonic() - t0, 1),
@@ -221,7 +240,9 @@ def run_fixpoint(workdir: str | None = None, timeout: int = 300) -> dict:
                  "-> re-extract identical, ctx+abs (AS SERDE text, delimited "
                  "external, bucketed ORC, CHAR/VARCHAR, datasource and view "
                  "tables, ADD PARTITION x4 incl. INT and path-escaped values, "
-                 "MSCK; listings as SHOW ... LIKE; "
+                 "MSCK; listings as SHOW ... LIKE; Hive client calls: 1 per "
+                 "table or view, 4 per partitioned table, "
+                 f"{calls} per extract of hv; "
                  "use_context=False arm: qualified names + absolute "
                  "locations on an external table)"
                  if ok else "FAIL §2A catalog fixpoint"),
