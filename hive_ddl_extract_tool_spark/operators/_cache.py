@@ -1,7 +1,8 @@
 """Tiny per-session materialization cache for intermediate DataFrames shared
 by several registered queries (e.g. the distinct (doc_id, shingle-hash) set
-used by q42/q43, the SimHash signatures used by q45, the LSH buckets used by
-q47/q49b, the unit-normalized vectors used by q49/q49b).
+used by q43/q202/q218/q247, the LSH candidate pairs and candidate shingles
+used by q42/q193/q106, the SimHash signatures used by q45, the LSH buckets
+used by q47/q49b, the unit-normalized vectors used by q49/q49b).
 
 Why it exists: a self-join of an unmaterialized plan computes its source
 twice, and pipelines like MinHash-LSH reuse the shingle set in two subtrees

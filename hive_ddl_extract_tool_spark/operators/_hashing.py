@@ -11,6 +11,14 @@ bit-for-bit incl. unicode and empty strings):
 15 hex chars = 60 bits, always positive, no BIGINT overflow. For MinHash the
 universal-hash family is h_i(x) = (a_i * (h60(x) % P31) + b_i) % P31 with
 P31 = 2^31 - 1: the product stays < 2^62, inside BIGINT for both engines.
+
+Each Spark kernel takes Spark SQL text (a column name or an expression such
+as "lower(text)") and returns ONE `F.expr`, its SQL beside the DuckDB `*_sql`
+twin (`h60_expr` hands the text itself to callers that splice it into a
+larger expression). Building a Column costs the driver py4j round trips --
+three per `F.*` function (two reflection lookups plus the call) -- so an
+expression tree written as SQL text costs the three of one `F.expr` instead
+of three per node, and spliced into a `selectExpr` it costs nothing extra.
 """
 
 from __future__ import annotations
@@ -26,10 +34,13 @@ MINHASH_SEEDS: list[tuple[int, int]] = [
 ]
 
 
-def h60(col: Column | str) -> Column:
-    if isinstance(col, str):
-        col = F.col(col)
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+def h60_expr(expr: str) -> str:
+    """Spark SQL text of the 60-bit hash of the SQL expression `expr`."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def h60(expr: str) -> Column:
+    return F.expr(h60_expr(expr))
 
 
 def h60_sql(expr: str) -> str:
@@ -37,24 +48,17 @@ def h60_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
-def canon_empty(col: Column | str) -> Column:
+def canon_empty_sql(expr: str) -> str:
     """NULL and '' collapsed to one sentinel before fingerprinting: CSV
     cannot represent the difference (its reader sees both as null), so the
     round-trip contracts (q165/q194) canonicalize identically on both
-    engines. SQL twin: CASE WHEN x IS NULL OR x = '' THEN '<empty>' ELSE x END."""
-    if isinstance(col, str):
-        col = F.col(col)
-    return F.when(col.isNull() | (col == ""), F.lit("<empty>")).otherwise(col)
-
-
-def canon_empty_sql(expr: str) -> str:
-    """DuckDB twin of canon_empty."""
+    engines. The text is the same in Spark SQL and DuckDB."""
     return f"CASE WHEN {expr} IS NULL OR {expr} = '' THEN '<empty>' ELSE {expr} END"
 
 
-def minhash(col: Column | str, a: int, b: int) -> Column:
+def minhash(expr: str, a: int, b: int) -> Column:
     """One member of the universal hash family over h60, mod P31."""
-    return (F.lit(a) * (h60(col) % F.lit(P31)) + F.lit(b)) % F.lit(P31)
+    return F.expr(f"(({a} * ({h60_expr(expr)} % {P31})) + {b}) % {P31}")
 
 
 def minhash_sql(expr: str, a: int, b: int) -> str:

@@ -728,7 +728,7 @@ def q108_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
     )
-    is_upd = F.pmod(h60(F.concat(F.lit("upd:"), F.col("c_custkey").cast("string"))), F.lit(SCD2_UPD_MOD)) == 0
+    is_upd = F.pmod(h60("concat('upd:', CAST(c_custkey AS STRING))"), F.lit(SCD2_UPD_MOD)) == 0
     updates = cust.filter(is_upd).select(
         "c_custkey",
         F.lit("MIGRATED").alias("c_mktsegment"),
@@ -848,9 +848,9 @@ def q129_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    mig = F.pmod(h60(F.concat(F.lit("pit:"), F.col("c_custkey").cast("string"))), F.lit(PIT_MOD)) == 0
+    mig = F.pmod(h60("concat('pit:', CAST(c_custkey AS STRING))"), F.lit(PIT_MOD)) == 0
     mig_day = PIT_BASE_DAY + F.pmod(
-        h60(F.concat(F.lit("pitday:"), F.col("c_custkey").cast("string"))), F.lit(PIT_DAY_SPAN)
+        h60("concat('pitday:', CAST(c_custkey AS STRING))"), F.lit(PIT_DAY_SPAN)
     )
     v1 = cust.select(
         "c_custkey", F.lit(-1).alias("day"), F.lit(0).alias("tag"), F.col("c_mktsegment").alias("seg")

@@ -242,7 +242,7 @@ def q197_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "variant",
-            F.pmod(h60(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), F.lit(2)),
+            F.pmod(h60("concat('ab:', CAST(user_id AS STRING))"), F.lit(2)),
         )
     )
     arms = per_user.groupBy("variant").agg(

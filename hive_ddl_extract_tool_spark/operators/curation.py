@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ._hashing import h60, h60_sql
-from .text import (LOWER_WORDS_SQL, NON_ALNUM, WS, _marker_count,
+from .text import (LOWER_WORDS_SQL, NON_ALNUM, NORM_TEXT_EXPR, _marker_count,
                    _marker_count_sql, _quality_score, _quality_score_sql, _words)
 from ..tables import load
 
@@ -48,8 +48,8 @@ def q94_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        w = docs.select("source", _words(F.lower("text")).alias("w"))
-        fp = h60(F.concat_ws(" ", F.slice("w", 1, PREFIX_WORDS)))
+        w = docs.select("source", _words("lower(text)").alias("w"))
+        fp = h60(f"concat_ws(' ', slice(w, 1, {PREFIX_WORDS}))")
         # zero-word documents carry no prefix content: without the filter
         # Spark fingerprints them as h60('') -- two shards each holding one
         # empty doc would read as "leaking" into each other -- while the
@@ -105,8 +105,7 @@ def _gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. Gates 1/3/4 are pure integer predicates; gate 2 reuses q34's
     exact expression tree."""
     docs = load(spark, sf_dir, "documents")
-    w = docs.select("doc_id", "source", "text", _words(F.lower("text")).alias("w"))
-    norm = F.trim(F.regexp_replace(F.lower("text"), WS, " "))
+    w = docs.select("doc_id", "source", "text", _words("lower(text)").alias("w"))
     per = w.select(
         "doc_id",
         "source",
@@ -115,7 +114,7 @@ def _gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_count("text", F.lit(NON_ALNUM)).cast("double").alias("n_punct"),
         _marker_count("en", F.col("w")).cast("double").alias("n_stop"),
         F.length("text").cast("double").alias("n_chars"),
-        h60(norm).alias("fp"),
+        h60(NORM_TEXT_EXPR).alias("fp"),
     )
     nwd = F.col("nw").cast("double")
     # Guarded: nw >= MIN_WORDS (>0) implies text is non-empty, so inside g2

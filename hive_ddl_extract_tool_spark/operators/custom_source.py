@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._cache import scratch_dir
-from ._hashing import canon_empty, canon_empty_sql, h60, h60_sql
+from ._hashing import canon_empty_sql, h60, h60_sql
 
 SYNTH_N = 20_000   # generated rows
 SYNTH_PARTS = 8    # independent input splits
@@ -202,7 +202,7 @@ def q194_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     rb = spark.read.schema(
         "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
     ).json(files)
-    h60_text = h60(canon_empty("text"))  # the shared hash/canon pair -- a
+    h60_text = h60(canon_empty_sql("text"))  # the shared hash/canon pair -- a
     # divergent inline copy here would silently fork the fingerprint convention
     return rb.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -26,8 +26,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._cache import cached_df
-from ._hashing import MINHASH_SEEDS, P31, h60, h60_sql
-from .text import WS, _words, ngrams_sql, word_ngrams  # the ONE tokenizer definition (see text.py)
+from ._hashing import MINHASH_SEEDS, P31, h60, h60_expr, h60_sql
+# the ONE tokenizer definition (see text.py)
+from .text import WS, _words, _words_expr, ngrams_sql, word_ngrams, word_ngrams_expr
 from ..tables import load
 SHINGLE_N = 3
 N_HASHES = 16
@@ -35,17 +36,21 @@ N_BANDS = 8  # 2 rows per band
 JACCARD_THRESHOLD = 0.8
 
 
-def _shingles_from_words(w: Column) -> Column:
+def _shingles_from_words_expr(w: str) -> str:
     """3-word shingles from a *materialized* word-array column; empty array
     for docs under 3 words (the n=3 case of text.word_ngrams -- one span
     template for every gram consumer)."""
-    return word_ngrams(w, SHINGLE_N)
+    return word_ngrams_expr(w, SHINGLE_N)
 
 
-def _shingles(col: Column | str = "text") -> Column:
-    """3-word shingles straight from a text column (convenience form; prefer
-    materializing the word array first in hot paths)."""
-    return _shingles_from_words(_words(col))
+def _shingles_from_words(w: str) -> Column:
+    return F.expr(_shingles_from_words_expr(w))
+
+
+def _shingles(expr: str = "text") -> Column:
+    """3-word shingles straight from a text expression (convenience form;
+    prefer materializing the word array first in hot paths)."""
+    return F.expr(_shingles_from_words_expr(_words_expr(expr)))
 
 
 # DuckDB twin of _shingles, as a FROM-able fragment producing (doc_id, shingle)
@@ -70,9 +75,9 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, cache: bool = False) -> Data
     to 3x per query. Single-consumer pipelines (q41 standalone) leave it off
     so the shingle stream fuses straight into their aggregation (measured:
     the persist costs ~1.2 s at sf0.1 with no reuse to amortize it). The
-    q42/q193 chain no longer uses it at all (r16): its signatures come off
-    the raw stream and its verify off the candidate-only q42_dsc stage, so
-    nothing corpus-sized is written per session on that path.
+    q42/q193/q106 chain does not use it: its signatures come off the raw
+    stream and its verify off the candidate-only q42_dsc stage, so nothing
+    corpus-sized is written on that path (OPTIMIZATION_r16.md §E1).
 
     A doc_id-bucketed stage was measured and rejected (OPTIMIZATION_r15.md
     §E4: when the bucketed variant would win)."""
@@ -96,9 +101,9 @@ def _doc_shingles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter(split(...)) expression re-evaluates the regex split per access
     # (O(words^2) per doc -- measured 3x slower at sf0.1).
     return (
-        docs.select("doc_id", _words().alias("w"))
-        .select("doc_id", F.explode(_shingles_from_words(F.col("w"))).alias("shingle"))
-        .select("doc_id", h60("shingle").alias("sh"))
+        docs.selectExpr("doc_id", f"{_words_expr()} AS w")
+        .selectExpr("doc_id", f"explode({_shingles_from_words_expr('w')}) AS shingle")
+        .selectExpr("doc_id", f"{h60_expr('shingle')} AS sh")
     )
 
 
@@ -172,10 +177,10 @@ def q41_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_wide(ds: DataFrame) -> DataFrame:
-    """(doc_id, m0..m15) -- the columnar signature (one min-agg per seed)."""
-    hm = F.col("sh") % F.lit(P31)
+    """(doc_id, m0..m15) -- the columnar signature (one min-agg per seed)
+    over a (doc_id, sh) table."""
     mins = [
-        F.min((F.lit(a) * hm + F.lit(b)) % F.lit(P31)).alias(f"m{i}")
+        F.expr(f"min(({a} * (sh % {P31}) + {b}) % {P31}) AS m{i}")
         for i, (a, b) in enumerate(MINHASH_SEEDS)
     ]
     return ds.groupBy("doc_id").agg(*mins)
@@ -184,10 +189,9 @@ def _minhash_wide(ds: DataFrame) -> DataFrame:
 def _minhash_from_shingles(ds: DataFrame) -> DataFrame:
     wide = _minhash_wide(ds)
     stack_args = ", ".join(f"{i}, m{i}" for i in range(len(MINHASH_SEEDS)))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({len(MINHASH_SEEDS)}, {stack_args}) AS (seed_id, minh)"),
-    ).select("doc_id", F.col("seed_id").cast("int").alias("seed_id"), "minh")
+    return wide.selectExpr(
+        "doc_id", f"stack({len(MINHASH_SEEDS)}, {stack_args}) AS (seed_id, minh)"
+    ).selectExpr("doc_id", "CAST(seed_id AS INT) AS seed_id", "minh")
 
 
 def _minhash_long_sql() -> str:
@@ -233,25 +237,21 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The signatures come straight from the RAW shingle stream: every band
     key is a min() over the doc's shingle hashes, which duplicate shingles
-    cannot change, so no distinct shingle set is built first (r16 -- the
-    r15 chain staged the corpus-sized distinct set and computed the
-    signatures from the staged copy; the one exchange here carries
-    map-side-combined partial minima, one row per (doc, partition))."""
+    cannot change, so no distinct shingle set is built first; the one
+    exchange here carries map-side-combined partial minima, one row per
+    (doc, partition) (history: OPTIMIZATION_r16.md §E1)."""
     rows_per_band = N_HASHES // N_BANDS
     assert rows_per_band == 2, "band-key pair layout assumes 2 rows/band"
 
     def build_cand() -> DataFrame:
         bands = _band_rows(_minhash_wide(_doc_shingles_raw(spark, sf_dir)))
-        a, b = bands.alias("a"), bands.alias("b")
         return (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.ka") == F.col("b.ka"))
-                & (F.col("a.kb") == F.col("b.kb"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            bands.alias("a")
+            .join(
+                bands.alias("b"),
+                F.expr("a.band = b.band AND a.ka = b.ka AND a.kb = b.kb AND a.doc_id < b.doc_id"),
             )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
             .distinct()
         )
 
@@ -267,12 +267,10 @@ def _cand_shingle_sizes(
 ) -> DataFrame:
     """Staged (doc_id, sh, sz): the DISTINCT shingles of every document in
     a candidate pair, with the doc's distinct-shingle count attached to
-    each row. THE verify-side artifact (r16, guide §8 "decide with small
-    rows"): it is near-dup-population-sized, so the exact-Jaccard verify
-    reads IT -- twice, as the two join sides -- instead of re-deriving
-    candidate shingles per subtree (the r15 shape re-scanned the
-    corpus-sized shingle table four times per verify and re-ran the
-    candidate-docs semi-filter in each copy).
+    each row. THE verify-side artifact: it is near-dup-population-sized,
+    so the exact-Jaccard verify reads IT -- twice, as the two join sides --
+    instead of re-deriving candidate shingles per subtree, and q106's
+    signatures fold over it (OPTIMIZATION_r16.md §E1).
 
     ds=None rebuilds from the RAW shingle stream (one extra documents
     scan; dedup happens AFTER the semi-filter, so the distinct shuffle is
@@ -295,18 +293,16 @@ def _cand_shingle_sizes_build(
 ) -> DataFrame:
     """The un-staged build behind _cand_shingle_sizes."""
     cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select("doc_b"))
+        cand.selectExpr("doc_a AS doc_id")
+        .union(cand.selectExpr("doc_b"))
         # No .distinct(): a LEFT SEMI join is EXISTS -- duplicate
-        # build-side keys cannot change its output (r15).
+        # build-side keys cannot change its output.
     )
     src = _doc_shingles_raw(spark, sf_dir) if ds is None else ds
     ds_c = src.join(cand_docs, "doc_id", "semi").repartition("doc_id")
     if ds is None:
         ds_c = ds_c.distinct()
-    return ds_c.withColumn(
-        "sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-    )
+    return ds_c.withColumn("sz", F.expr("count(1) OVER (PARTITION BY doc_id)"))
 
 
 def _verified_pair_stats(ds_c: DataFrame, cand: DataFrame) -> DataFrame:
@@ -318,40 +314,30 @@ def _verified_pair_stats(ds_c: DataFrame, cand: DataFrame) -> DataFrame:
     doc, so min() after the pair grouping recovers it exactly; every
     downstream similarity (Jaccard, containment) is a projection of this
     one aggregate -- no sizes joins."""
-    sa, sb = ds_c.alias("sa"), ds_c.alias("sb")
     return (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sb,
-            (F.col("doc_b") == F.col("sb.doc_id")) & (F.col("sa.sh") == F.col("sb.sh")),
-        )
+        cand.join(ds_c.alias("sa"), F.expr("doc_a = sa.doc_id"))
+        .join(ds_c.alias("sb"), F.expr("doc_b = sb.doc_id AND sa.sh = sb.sh"))
         .groupBy("doc_a", "doc_b")
         .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.min("sa.sz").alias("sz_a"),
-            F.min("sb.sz").alias("sz_b"),
+            F.expr("count(1) AS inter"),
+            F.expr("min(sa.sz) AS sz_a"),
+            F.expr("min(sb.sz) AS sz_b"),
         )
     )
 
 
 def _q42_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r16 shape (guide §8): candidates from the RAW shingle stream (min is
-    duplicate-insensitive, so the corpus-sized distinct of the r15 chain is
-    not needed for signatures), then verify on the staged candidate-only
-    shingle artifact. Nothing corpus-sized is ever staged or re-read: the
-    old chain wrote the full distinct shingle set to scratch and scanned it
-    four more times in the verify; this one scans documents twice (once per
-    staging job) and every staged artifact is near-dup-population-sized."""
+    """Candidates from the RAW shingle stream (min is duplicate-insensitive,
+    so signatures need no corpus-sized distinct), then verify on the staged
+    candidate-only shingle artifact. Nothing corpus-sized is staged or
+    re-read: documents are scanned twice (once per staging job) and every
+    staged artifact is near-dup-population-sized (OPTIMIZATION_r16.md §E1)."""
     cand = _lsh_candidates(spark, sf_dir)
     ds_c = _cand_shingle_sizes(spark, sf_dir, f"q42_dsc:{sf_dir}", cand)
     return (
         _verified_pair_stats(ds_c, cand)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .selectExpr("doc_a", "doc_b", "round(inter / (sz_a + sz_b - inter), 6) AS jaccard")
+        .filter(f"jaccard >= CAST({JACCARD_THRESHOLD} AS DOUBLE)")
     )
 
 
@@ -414,26 +400,20 @@ def q193_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ties break to doc_a)."""
     cand = _lsh_candidates(spark, sf_dir)
     ds_c = _cand_shingle_sizes(spark, sf_dir, f"q42_dsc:{sf_dir}", cand)
-    scored = _verified_pair_stats(ds_c, cand).select(
-        "doc_a",
-        "doc_b",
-        F.col("sz_a").alias("sza"),
-        F.col("sz_b").alias("szb"),
-        "inter",
+    scored = _verified_pair_stats(ds_c, cand).selectExpr(
+        "doc_a", "doc_b", "sz_a AS sza", "sz_b AS szb", "inter"
     )
-    small_is_a = (F.col("sza") < F.col("szb")) | (
-        (F.col("sza") == F.col("szb")) & (F.col("doc_a") < F.col("doc_b"))
+    small_is_a = "sza < szb OR (sza = szb AND doc_a < doc_b)"
+    out = scored.selectExpr(
+        f"CASE WHEN {small_is_a} THEN doc_a ELSE doc_b END AS doc_contained",
+        f"CASE WHEN {small_is_a} THEN doc_b ELSE doc_a END AS doc_container",
+        "least(sza, szb) AS sz_contained",
+        "greatest(sza, szb) AS sz_container",
+        "CAST(inter * 1000000 DIV least(sza, szb) AS BIGINT) AS containment_ppm",
+        "CAST(inter * 1000000 DIV (sza + szb - inter) AS BIGINT) AS jaccard_ppm",
     )
-    out = scored.select(
-        F.when(small_is_a, F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_contained"),
-        F.when(small_is_a, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_container"),
-        F.least("sza", "szb").alias("sz_contained"),
-        F.greatest("sza", "szb").alias("sz_container"),
-        F.expr("CAST(inter * 1000000 DIV least(sza, szb) AS BIGINT)").alias("containment_ppm"),
-        F.expr("CAST(inter * 1000000 DIV (sza + szb - inter) AS BIGINT)").alias("jaccard_ppm"),
-    )
-    return out.filter(F.col("containment_ppm") >= CONTAIN_MIN_PPM).withColumn(
-        "is_asymmetric", F.col("jaccard_ppm") < CONTAIN_MIN_PPM
+    return out.filter(f"containment_ppm >= {CONTAIN_MIN_PPM}").withColumn(
+        "is_asymmetric", F.expr(f"jaccard_ppm < {CONTAIN_MIN_PPM}")
     )
 
 
@@ -461,22 +441,18 @@ WHERE inter * 1000000 // least(za.sz, zb.sz) >= {CONTAIN_MIN_PPM}
 
 def q43_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ds = _doc_shingles(spark, sf_dir, cache=True)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a, b = ds.alias("a"), ds.alias("b")
+    sizes = ds.groupBy("doc_id").agg(F.expr("count(1) AS sz"))
     inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
+        ds.alias("a")
+        .join(ds.alias("b"), F.expr("a.sh = b.sh AND a.doc_id < b.doc_id"))
+        .groupBy(F.expr("a.doc_id AS doc_a"), F.expr("b.doc_id AS doc_b"))
+        .agg(F.expr("count(1) AS inter"))
     )
     return (
-        inter.join(sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id"))
-        .join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("inter") / (F.col("za.sz") + F.col("zb.sz") - F.col("inter")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        inter.join(sizes.alias("za"), F.expr("doc_a = za.doc_id"))
+        .join(sizes.alias("zb"), F.expr("doc_b = zb.doc_id"))
+        .selectExpr("doc_a", "doc_b", "round(inter / (za.sz + zb.sz - inter), 6) AS jaccard")
+        .filter(f"jaccard >= CAST({JACCARD_THRESHOLD} AS DOUBLE)")
     )
 
 
@@ -906,32 +882,34 @@ def q106_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree) against the exact shingle-set Jaccard the verify step computed,
     and publish the estimator's mean error as one driver-checked row.
 
-    Cost shape: rides the STAGED q42 pair set (tiny) and the columnar
-    signatures -- two equi-joins by doc id, bounded by |pairs|. Every
-    number is integer ppm: the estimate is (n_eq * 1e6) DIV 16 by
-    construction, and the exact side re-rounds q42's 6dp jaccard, which is
-    bit-identical cross-engine (identical doubles through an identical
-    expression tree)."""
+    Cost shape: rides the STAGED q42 pair set (tiny) and signatures folded
+    over the staged candidate-shingle set q42_dsc -- two equi-joins by doc
+    id, bounded by |pairs|, and no corpus-sized input. Every doc of a q42
+    pair is a candidate doc, and q42_dsc holds all of its distinct
+    shingles; min() is duplicate-insensitive, so these minima are the ones
+    a corpus-wide signature would give. Every number is integer ppm: the
+    estimate is (n_eq * 1e6) DIV 16 by construction, and the exact side
+    re-rounds q42's 6dp jaccard, which is bit-identical cross-engine
+    (identical doubles through an identical expression tree)."""
     pairs = q42_minhash_lsh_dedup(spark, sf_dir)
-    # min() is duplicate-insensitive, so the signature is identical whether
-    # built from the raw or distinct shingle stream; use the STAGED distinct
-    # set q42 already materialized -- no second tokenize/hash of the corpus
-    sig = _minhash_wide(_doc_shingles(spark, sf_dir, cache=True))
-    a = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"m{i}").alias(f"a{i}") for i in range(N_HASHES)])
-    b = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"m{i}").alias(f"b{i}") for i in range(N_HASHES)])
+    cand = _lsh_candidates(spark, sf_dir)
+    sig = _minhash_wide(_cand_shingle_sizes(spark, sf_dir, f"q42_dsc:{sf_dir}", cand))
+    a = sig.selectExpr("doc_id AS doc_a", *[f"m{i} AS a{i}" for i in range(N_HASHES)])
+    b = sig.selectExpr("doc_id AS doc_b", *[f"m{i} AS b{i}" for i in range(N_HASHES)])
+    n_eq = "+".join(f"CAST(a{i} = b{i} AS BIGINT)" for i in range(N_HASHES))
     per = (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
-            F.expr(f"({'+'.join(f'CAST(a{i} = b{i} AS BIGINT)' for i in range(N_HASHES))}) * 1000000 DIV {N_HASHES}").alias("est_ppm"),
-            F.floor(F.col("jaccard") * 1e6 + F.lit(0.5)).cast("bigint").alias("ex_ppm"),
+        .selectExpr(
+            f"({n_eq}) * 1000000 DIV {N_HASHES} AS est_ppm",
+            "CAST(floor(jaccard * CAST(1e6 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS ex_ppm",
         )
     )
-    return per.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.expr("sum(est_ppm) DIV count(*)").alias("mean_est_ppm"),
-        F.expr("sum(ex_ppm) DIV count(*)").alias("mean_exact_ppm"),
-        F.expr("sum(abs(est_ppm - ex_ppm)) DIV count(*)").alias("mean_abs_err_ppm"),
+    return per.selectExpr(
+        "count(1) AS n_pairs",
+        "sum(est_ppm) DIV count(*) AS mean_est_ppm",
+        "sum(ex_ppm) DIV count(*) AS mean_exact_ppm",
+        "sum(abs(est_ppm - ex_ppm)) DIV count(*) AS mean_abs_err_ppm",
     )
 
 
@@ -1027,17 +1005,15 @@ def q120_window_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens), the population the ppm speaks for."""
     def build_windows() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        w = docs.select("doc_id", "source", _words(F.lower("text")).alias("w")).filter(
+        w = docs.select("doc_id", "source", _words("lower(text)").alias("w")).filter(
             F.size("w") >= WINDOW_N
         )
+        window = f"concat_ws(' ', slice(w, i, {WINDOW_N}))"
         return w.select(
             "doc_id",
             "source",
             F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - (WINDOW_N - 1)),
-                    lambda i: h60(F.concat_ws(" ", F.slice("w", i, F.lit(WINDOW_N)))),
-                )
+                F.expr(f"transform(sequence(1, size(w) - {WINDOW_N - 1}), i -> {h60_expr(window)})")
             ).alias("gh"),
         )
 
@@ -1175,14 +1151,14 @@ ING_SEED = "ingest_v1"   # deterministic batch membership (q36's discipline)
 ING_MOD, ING_BUCKET = 10, 9  # ~10% of docs are "today's batch"
 
 
-def _is_new(col: Column) -> Column:
+def _is_new(col: str) -> Column:
     """Deterministic ingest-batch membership: h60('{ING_SEED}:' || id) mod
     ING_MOD lands in ING_BUCKET. Module-level because THREE consumers share
     it (q128's accounting, q131's streaming gate, and the _IS_NEW_SQL
     oracle twin below) -- a drifted copy silently breaks oracle parity."""
     return (
         F.pmod(
-            h60(F.concat(F.lit(f"{ING_SEED}:"), col.cast("string"))),
+            h60(f"concat('{ING_SEED}:', CAST({col} AS STRING))"),
             F.lit(ING_MOD),
         )
         == ING_BUCKET
@@ -1195,17 +1171,10 @@ def _band_rows(wide: DataFrame, *extra_cols: str) -> DataFrame:
     band-layout definition -- the batch LSH candidate join (q42) and the
     streaming gate's two sides (q131) all derive from it, so the band key
     cannot drift between the stored index and the in-flight gate."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.col(f"m{2 * b}").alias("ka"),
-                F.col(f"m{2 * b + 1}").alias("kb"),
-            )
-            for b in range(N_BANDS)
-        ]
+    band_structs = ", ".join(
+        f"struct({b} AS band, m{2 * b} AS ka, m{2 * b + 1} AS kb)" for b in range(N_BANDS)
     )
-    return wide.select("doc_id", *extra_cols, F.explode(band_structs).alias("e")).select(
+    return wide.selectExpr("doc_id", *extra_cols, f"explode(array({band_structs})) AS e").selectExpr(
         "doc_id", *extra_cols, "e.band", "e.ka", "e.kb"
     )
 
@@ -1228,17 +1197,17 @@ def q128_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = q42_minhash_lsh_dedup(spark, sf_dir).select("doc_a", "doc_b")
     sym = _sym_edges(pairs, "n", "x")
     flags = (
-        sym.filter(is_new(F.col("n")))
+        sym.filter(is_new("n"))
         .groupBy("n")
         .agg(
-            F.max(F.when(~is_new(F.col("x")), 1).otherwise(0)).alias("dup_idx"),
+            F.max(F.when(~is_new("x"), 1).otherwise(0)).alias("dup_idx"),
             F.max(
-                F.when(is_new(F.col("x")) & (F.col("x") < F.col("n")), 1).otherwise(0)
+                F.when(is_new("x") & (F.col("x") < F.col("n")), 1).otherwise(0)
             ).alias("dup_batch"),
         )
     )
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    batch = docs.filter(is_new(F.col("doc_id")))
+    batch = docs.filter(is_new("doc_id"))
     # Plain join (no broadcast hint): flags grows with the batch's near-dup
     # count; AQE broadcasts it at runtime when small, and a dup-heavy ingest
     # day degrades to a shuffle join instead of an executor OOM.
@@ -1611,16 +1580,16 @@ def q167_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def bucket(col):
-        return F.pmod(h60(F.concat(F.lit(CLSPLIT_SEED + ":"), col.cast("string"))), F.lit(10))
+        return F.pmod(h60(f"concat('{CLSPLIT_SEED}:', CAST({col} AS STRING))"), F.lit(10))
 
     split_of = lambda b: F.when(b < 8, "train").when(b < 9, "val").otherwise("test")
     cl = mapped.groupBy("canonical_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
-        F.countDistinct(split_of(bucket(F.col("doc_id")))).alias("n_naive_splits"),
+        F.countDistinct(split_of(bucket("doc_id"))).alias("n_naive_splits"),
     )
     per_split = cl.groupBy(
-        split_of(bucket(F.col("canonical_id"))).alias("split")
+        split_of(bucket("canonical_id")).alias("split")
     ).agg(
         F.count(F.lit(1)).alias("n_clusters"),
         F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -1700,10 +1669,10 @@ def q188_crossdoc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the span table is O(total tokens): the only shuffles are
     keyed by span hash and doc_id, both bounded, never pairwise."""
     docs = load(spark, sf_dir, "documents")
-    w = docs.select("doc_id", "source", _words(F.lower("text")).alias("w"))
+    w = docs.select("doc_id", "source", _words("lower(text)").alias("w"))
     grams = word_ngrams("w", SPAN_N)
     g = w.select("doc_id", "source", F.explode(grams).alias("g")).select(
-        "doc_id", "source", h60(F.col("g")).alias("gh"), F.length("g").alias("glen")
+        "doc_id", "source", h60("g").alias("gh"), F.length("g").alias("glen")
     )
     per_doc_span = g.groupBy("doc_id", "source", "gh").agg(F.max("glen").alias("glen"))
     nd = F.count(F.lit(1)).over(Window.partitionBy("gh"))

@@ -214,7 +214,7 @@ def q173_bloom_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(
                 F.array(
                     *[
-                        (h60(F.concat(F.lit(f"bloom{j}:"), F.col("k").cast("string")))
+                        (h60(f"concat('bloom{j}:', CAST(k AS STRING))")
                          % F.col("m_bits")).alias("p")
                         for j in range(BLOOM_K)
                     ]
@@ -439,9 +439,7 @@ def q239_sampling_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; the output is group-cardinality-sized."""
     from .relational2 import _rev4
 
-    rowkey = F.concat_ws(
-        "#", F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
-    )
+    rowkey = "concat_ws('#', CAST(l_orderkey AS STRING), CAST(l_linenumber AS STRING))"
     # the ONE money-discipline definition (relational2._rev4), widened for
     # the scaled-error arithmetic below
     rev4 = _rev4().cast("decimal(38,0)")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ._cache import scratch_dir
-from ._hashing import canon_empty, canon_empty_sql, h60, h60_sql
+from ._hashing import canon_empty_sql, h60, h60_sql
 from ._rounding import mround
 from .skew import salted_join
 from ..sources.io import compact, read_table, write_bucketed, write_table
@@ -233,13 +233,10 @@ def q165_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir("q165_roundtrip", sf_dir)
     schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 
-    row_repr = F.concat_ws(
-        "\x1f",
-        F.col("doc_id").cast("string"),
-        canon_empty("text"),
-        canon_empty("lang"),
-        canon_empty("source"),
-        F.col("n_chars").cast("string"),
+    row_repr = (
+        "concat_ws('\x1f', CAST(doc_id AS STRING), "
+        f"{canon_empty_sql('text')}, {canon_empty_sql('lang')}, {canon_empty_sql('source')}, "
+        "CAST(n_chars AS STRING))"
     )
     out = None
     for fmt in ROUNDTRIP_FORMATS:
@@ -380,7 +377,7 @@ def q204_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         1 for f in os.listdir(data) if not f.startswith(("_", "."))
     )
     rb = spark.read.parquet(data)
-    id_fp = h60(F.col("event_id").cast("string")) % 1_000_000_007
+    id_fp = h60("CAST(event_id AS STRING)") % 1_000_000_007
     return rb.agg(
         F.lit(before).cast("bigint").alias("n_files_before"),
         F.lit(after).cast("bigint").alias("n_files_after"),
@@ -486,24 +483,18 @@ def q226_merkle_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         o = load(spark, sf_dir, "orders")
-        key = F.col("o_orderkey")
-        cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-        cents_b = cents + F.when(key % MKL_CORRUPT_MOD == 0, 1).otherwise(0)
-        in_b = (key % MKL_DEL_MOD != 0).cast("int")
+        cents = "CAST(round(o_totalprice * 100) AS BIGINT)"
+        cents_b = f"{cents} + CASE WHEN o_orderkey % {MKL_CORRUPT_MOD} = 0 THEN 1 ELSE 0 END"
+        in_b = (F.col("o_orderkey") % MKL_DEL_MOD != 0).cast("int")
 
         def rowh(c):
             return h60(
-                F.concat_ws(
-                    "\x1f",
-                    key.cast("string"),
-                    c.cast("string"),
-                    F.col("o_orderstatus"),
-                )
+                f"concat_ws('\x1f', CAST(o_orderkey AS STRING), CAST({c} AS STRING), o_orderstatus)"
             ) % _FP_MOD
 
         return (
             o.select(
-                (h60(key.cast("string")) % MKL_LEAVES).alias("bucket"),
+                (h60("CAST(o_orderkey AS STRING)") % MKL_LEAVES).alias("bucket"),
                 rowh(cents).cast("decimal(38,0)").alias("ha"),
                 (rowh(cents_b) * in_b).cast("decimal(38,0)").alias("hb"),
                 in_b.alias("nb"),

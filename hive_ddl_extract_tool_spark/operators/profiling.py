@@ -205,11 +205,11 @@ def q190_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _words
 
     docs = load(spark, sf_dir, "documents")
-    w = docs.select("source", _words(F.lower("text")).alias("w"))
+    w = docs.select("source", _words("lower(text)").alias("w"))
     grams = word_ngrams("w", GT_N)
     wc = (
         w.select("source", F.explode(grams).alias("g"))
-        .groupBy("source", h60(F.col("g")).alias("gh"))
+        .groupBy("source", h60("g").alias("gh"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
     return wc.groupBy("source").agg(
@@ -1158,7 +1158,7 @@ def q225_cms_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # staged: the sketch build reads it d times and the estimate join once
     counts = cached_df(spark, f"q225_counts:{sf_dir}", build)
-    key_str = F.col("user_id").cast("string")
+    key_str = "CAST(user_id AS STRING)"
     keyed = counts.select(
         "user_id",
         "n_exact",

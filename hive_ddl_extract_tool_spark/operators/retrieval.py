@@ -58,7 +58,7 @@ def _query_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         f"bm25_toks:{sf_dir}",
         lambda: load(spark, sf_dir, "documents").select(
-            "doc_id", F.explode(_words(F.lower("text"))).alias("term")
+            "doc_id", F.explode(_words("lower(text)")).alias("term")
         ),
     )
 
@@ -181,7 +181,7 @@ def q82_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         f"q82_words:{sf_dir}",
         lambda: load(spark, sf_dir, "documents").select(
-            "doc_id", _words(F.lower("text")).alias("w")
+            "doc_id", _words("lower(text)").alias("w")
         ),
     )
     # bigram array is materialized in its own select BEFORE the explode: a
@@ -274,7 +274,7 @@ def q85_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     string column -- the two-groupBy plan shape is identical."""
     docs = load(spark, sf_dir, "documents")
     tf = (
-        docs.select("doc_id", F.explode(_words(F.lower("text"))).alias("term"))
+        docs.select("doc_id", F.explode(_words("lower(text)")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -334,7 +334,7 @@ def q92_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build_doc_bg() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        w = docs.select("doc_id", _words(F.lower("text")).alias("w"))
+        w = docs.select("doc_id", _words("lower(text)").alias("w"))
         return (
             w.filter(F.size("w") >= 2)
             .select(
@@ -354,7 +354,7 @@ def q92_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build_uni() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
         return (
-            docs.select(F.explode(_words(F.lower("text"))).alias("tok"))
+            docs.select(F.explode(_words("lower(text)")).alias("tok"))
             .groupBy("tok")
             .agg(F.count(F.lit(1)).alias("c_a"))
         )
@@ -545,7 +545,7 @@ def q213_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         pos = (
             load(spark, sf_dir, "documents")
-            .select("doc_id", F.posexplode(_words(F.lower("text"))).alias("pos", "w1"))
+            .select("doc_id", F.posexplode(_words("lower(text)")).alias("pos", "w1"))
         )
         wnext = W.partitionBy("doc_id").orderBy("pos")
         return (

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ._hashing import h60, h60_sql
+from ._hashing import h60, h60_expr, h60_sql
 from ._rounding import mround
 from .text import (LANG_MARKERS, LOWER_WORDS_SQL, NON_ALNUM, SPLIT_SEED,
                    _marker_count, _marker_count_sql, _quality_score,
@@ -53,7 +53,7 @@ def q100_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once per doc; the only shuffle is the final
     low-cardinality per-source rollup."""
     docs = load(spark, sf_dir, "documents")
-    w = docs.select("source", _words(F.lower("text")).alias("w"))
+    w = docs.select("source", _words("lower(text)").alias("w"))
     markers = F.array(*[F.lit(m) for m in LANG_MARKERS["en"]])
     per = w.select(
         "source",
@@ -188,7 +188,7 @@ def _quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build_per() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        w = docs.select("doc_id", "source", "text", _words(F.lower("text")).alias("w"))
+        w = docs.select("doc_id", "source", "text", _words("lower(text)").alias("w"))
         nwd = F.size("w").cast("double")
         n_punct = F.regexp_count("text", F.lit(NON_ALNUM)).cast("double")
         n_stop = _marker_count("en", F.col("w")).cast("double")
@@ -319,17 +319,15 @@ def q104_ngram_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .text import split_of
 
         docs = load(spark, sf_dir, "documents")
-        w = docs.select("doc_id", split_of("doc_id").alias("split"), _words(F.lower("text")).alias("w")).filter(
+        w = docs.select("doc_id", split_of("doc_id").alias("split"), _words("lower(text)").alias("w")).filter(
             F.size("w") >= DECONTAM_N
         )
+        window = f"concat_ws(' ', slice(w, i, {DECONTAM_N}))"
         return w.select(
             "doc_id",
             "split",
             F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - (DECONTAM_N - 1)),
-                    lambda i: h60(F.concat_ws(" ", F.slice("w", i, F.lit(DECONTAM_N)))),
-                )
+                F.expr(f"transform(sequence(1, size(w) - {DECONTAM_N - 1}), i -> {h60_expr(window)})")
             ).alias("gh"),
         ).distinct()
 
@@ -465,7 +463,7 @@ def _dsir_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
         return docs.select(
             "doc_id",
             "source",
-            F.explode(_words(F.lower("text"))).alias("tok"),
+            F.explode(_words("lower(text)")).alias("tok"),
         ).select("doc_id", "source", (h60("tok") % F.lit(DSIR_B)).alias("b"))
 
     return cached_df(spark, f"dsir_toks:{sf_dir}", build)
@@ -595,13 +593,13 @@ def _build_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights = spark.range(QC_B).select(
         F.col("id").alias("b"),
         (
-            h60(F.concat(F.lit("qw_"), F.col("id").cast("string"))) % (2 * QC_W_RANGE + 1)
+            h60("concat('qw_', CAST(id AS STRING))") % (2 * QC_W_RANGE + 1)
             - QC_W_RANGE
         ).alias("w"),
     )
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", "source", F.explode(_words(F.lower("text"))).alias("tok")
+        "doc_id", "source", F.explode(_words("lower(text)")).alias("tok")
     ).select("doc_id", "source", (h60("tok") % F.lit(QC_B)).alias("b"))
     return (
         toks.join(F.broadcast(weights), "b")
@@ -776,7 +774,7 @@ def q126_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).cast("bigint"),
     ).alias("w")
     u = (
-        (h60(F.concat(F.lit("samp_"), F.col("doc_id").cast("string"))) % F.lit(2**ES_U_BITS))
+        (h60("concat('samp_', CAST(doc_id AS STRING))") % F.lit(2**ES_U_BITS))
         .cast("double")
         + F.lit(0.5)
     ) / F.lit(float(2**ES_U_BITS))
@@ -1117,7 +1115,7 @@ def q187_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # directly inside the estimator. w*M*M stays under 2^63 for n_chars up
     # to ~9e6; a corpus with longer documents raises M-scale to DECIMAL.
     d = docs.withColumn(
-        "u", (h60(F.col("doc_id").cast("string")) % PRIO_M) + 1
+        "u", (h60("CAST(doc_id AS STRING)") % PRIO_M) + 1
     ).withColumn("q", F.expr(f"(w * {PRIO_M} * {PRIO_M}) DIV u"))
     wnd = W.partitionBy("source").orderBy(F.col("q").desc(), "doc_id")
     r = d.withColumn("rk", F.row_number().over(wnd))
@@ -1149,7 +1147,7 @@ def q187_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.sum(
                 F.when(
-                    in_sample, h60(F.col("doc_id").cast("string")) % 1_000_000_007
+                    in_sample, h60("CAST(doc_id AS STRING)") % 1_000_000_007
                 ).otherwise(0)
             )
             % 1_000_000_007

@@ -546,7 +546,7 @@ def _recall_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return (
             _normalized(spark, sf_dir)
-            .select("vec_id", "u", h60(F.col("vec_id").cast("string")).alias("hs"))
+            .select("vec_id", "u", h60("CAST(vec_id AS STRING)").alias("hs"))
             .orderBy("hs", "vec_id")
             .limit(RECALL_SAMPLE_N)
             .select(F.col("vec_id").alias("anchor_id"), F.col("u").alias("ua"))

@@ -6,6 +6,15 @@ Everything is built-in string/regex/higher-order functions -- JVM-side,
 whole-stage codegen, no Python UDFs -- so the per-row cost is constant and
 the operators scale linearly with document count (the only shuffles are the
 final low-cardinality aggregations).
+
+The shared tokenizer kernels (_words, word_ngrams) take Spark SQL text -- a
+column name or an expression such as "lower(text)" -- and return ONE
+`F.expr` over the text their `*_expr` twins build, which sit beside the
+DuckDB twins (LOWER_WORDS_SQL, ngrams_sql). Every PySpark `F.*` call costs
+the driver three py4j round trips (two reflection lookups plus the call),
+so a kernel spelled as Column calls costs three per function node, while
+its SQL text costs three for the whole tree -- or nothing extra when it is
+spliced into a caller's `selectExpr`.
 """
 
 from __future__ import annotations
@@ -43,30 +52,39 @@ LANG_MARKERS = {
 }
 
 
-def _words(col: Column | str = "text") -> Column:
-    if isinstance(col, str):
-        col = F.col(col)
-    return F.filter(F.split(col, WS), lambda x: x != F.lit(""))
+# WS inside a Spark SQL string literal: the SQL parser unescapes backslashes
+# once, so each is doubled here and the regex receives WS exactly
+# (a bare '\x0B' would reach it as 'x0B').
+_WS_LITERAL = "'" + WS.replace("\\", "\\\\") + "'"
 
 
-def word_ngrams(w: Column | str, n: int) -> Column:
-    """Space-joined n-word grams from a MATERIALIZED word-array column;
-    empty array for docs shorter than n words. THE single Spark-side
-    implementation of the span template: q188 (8-grams), q190
-    (trigrams), q192 (bigrams), and dedup's 3-word shingles all derive
-    from this one expression, so the tokenizer/whitespace contract
-    (WS_CLASS) and the boundary arithmetic live in exactly one place.
-    Pair with ngrams_sql for the DuckDB twin."""
-    if isinstance(w, str):
-        w = F.col(w)
-    size = F.size(w)
-    return F.when(
-        size >= n,
-        F.transform(
-            F.sequence(F.lit(1), size - n + 1),
-            lambda i: F.concat_ws(" ", *[F.element_at(w, i + j) for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def _words_expr(expr: str = "text") -> str:
+    """Spark SQL text of the whitespace-split, empty-free word array."""
+    return f"filter(split({expr}, {_WS_LITERAL}), x -> x != '')"
+
+
+def _words(expr: str = "text") -> Column:
+    return F.expr(_words_expr(expr))
+
+
+def word_ngrams_expr(w: str, n: int) -> str:
+    """Space-joined n-word grams from a MATERIALIZED word-array column `w`
+    (a column name: it is referenced inside the gram lambda); empty array
+    for docs shorter than n words. THE single Spark-side implementation of
+    the span template: q188 (8-grams), q190 (trigrams), q192 (bigrams), and
+    dedup's 3-word shingles all derive from this one expression, so the
+    tokenizer/whitespace contract (WS_CLASS) and the boundary arithmetic
+    live in exactly one place. Pair with ngrams_sql for the DuckDB twin."""
+    grams = ", ".join(f"element_at({w}, i + {j})" for j in range(n))
+    return (
+        f"CASE WHEN size({w}) >= {n} "
+        f"THEN transform(sequence(1, size({w}) - {n} + 1), i -> concat_ws(' ', {grams})) "
+        f"ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+
+
+def word_ngrams(w: str, n: int) -> Column:
+    return F.expr(word_ngrams_expr(w, n))
 
 
 def ngrams_sql(n: int, w_expr: str = "w") -> str:
@@ -203,7 +221,7 @@ def q32_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-TOKEN scores (see _marker_count: \\b regex boundaries diverge
     cross-engine on non-ASCII neighbors), deterministic argmax."""
     docs = load(spark, sf_dir, "documents")
-    w = docs.select("lang", _words(F.lower("text")).alias("lw"))
+    w = docs.select("lang", _words("lower(text)").alias("lw"))
     scores = {lang: _marker_count(lang, F.col("lw")) for lang in LANG_MARKERS}
     # deterministic argmax: first language (in fixed order) with maximal score;
     # all-zero scores -> 'unknown'
@@ -244,10 +262,14 @@ GROUP BY lang, guess
 # q33: document fingerprint (60-bit hash of whitespace-normalized text)
 # --------------------------------------------------------------------------
 
+# Whitespace-normalized lowered text: the fingerprint input of q33 and of
+# curation's exact-dup gate (DuckDB twin: _NORM_SQL).
+NORM_TEXT_EXPR = f"trim(regexp_replace(lower(text), {_WS_LITERAL}, ' '))"
+
+
 def q33_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower("text"), WS, " "))
-    return docs.select("doc_id", h60(norm).alias("fingerprint"))
+    return docs.select("doc_id", h60(NORM_TEXT_EXPR).alias("fingerprint"))
 
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
@@ -276,7 +298,7 @@ def q34_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(words).cast("double")
     n_chars_c = F.length("text").cast("double")
     n_punct = F.regexp_count("text", F.lit(NON_ALNUM)).cast("double")
-    n_stop = _marker_count("en", _words(F.lower("text"))).cast("double")
+    n_stop = _marker_count("en", _words("lower(text)")).cast("double")
     avg_wlen = F.when(
         n_words > 0, F.aggregate(words, F.lit(0.0), lambda acc, w: acc + F.length(w)) / n_words
     )
@@ -348,7 +370,7 @@ def q35_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         f"q35_tf:{sf_dir}",
         lambda: docs.select(
-            "doc_id", F.explode(_words(F.lower("text"))).alias("term")
+            "doc_id", F.explode(_words("lower(text)")).alias("term")
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf")),
@@ -399,18 +421,14 @@ WHERE rn <= 3
 SPLIT_SEED = "split_v1"
 
 
-def split_bucket(col) -> Column:
+def split_bucket(expr: str) -> Column:
     """The q36 hash-split bucket in [0, 100): pmod(h60('{SPLIT_SEED}:'||id),
     100). Contract: train = bucket < 80, val = 80-89, test >= 90. The
     SINGLE split definition -- q36 itself, q86's lexical decontam and
     q133's semantic decontam all derive membership from it; a drifted copy
     silently breaks the train/test contract (q133 had exactly that drift:
     a 2-way collapse that reported val vectors as test)."""
-    if isinstance(col, str):
-        col = F.col(col)
-    return F.pmod(
-        h60(F.concat(F.lit(SPLIT_SEED + ":"), col.cast("string"))), F.lit(100)
-    )
+    return F.pmod(h60(f"concat('{SPLIT_SEED}:', CAST({expr} AS STRING))"), F.lit(100))
 
 
 def split_bucket_sql(expr: str) -> str:
@@ -418,9 +436,9 @@ def split_bucket_sql(expr: str) -> str:
     return f"({h60_sql(f''''{SPLIT_SEED}:' || CAST({expr} AS VARCHAR)''')} % 100)"
 
 
-def split_of(col) -> Column:
+def split_of(expr: str) -> Column:
     """Bucket -> 'train'/'val'/'test' label per the q36 contract."""
-    b = split_bucket(col)
+    b = split_bucket(expr)
     return F.when(b < 80, "train").when(b < 90, "val").otherwise("test")
 
 
@@ -468,7 +486,7 @@ def q71_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, never pairwise."""
     docs = load(spark, sf_dir, "documents")
     # materialize the word array once (HOF-over-inline-expression recompute trap)
-    w = docs.select("doc_id", _words(F.lower("text")).alias("w"))
+    w = docs.select("doc_id", _words("lower(text)").alias("w"))
     stats = w.select(
         "doc_id",
         F.size("w").alias("n_words"),
@@ -533,7 +551,7 @@ def q73_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     from pyspark.sql import Window as W
 
-    hk = h60(F.concat(F.lit(SAMPLE_SEED + ":"), F.col("doc_id").cast("string")))
+    hk = h60(f"concat('{SAMPLE_SEED}:', CAST(doc_id AS STRING))")
     w = W.partitionBy("lang").orderBy(hk.asc(), F.col("doc_id").asc())
     return (
         docs.select("lang", "doc_id", hk.alias("hk"))
@@ -571,7 +589,7 @@ def q76_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     20 per partition, never a global sort of the vocabulary."""
     docs = load(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(_words(F.lower("text"))).alias("token"))
+        docs.select(F.explode(_words("lower(text)")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("token").asc())
@@ -687,7 +705,7 @@ def q91_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted in integer parts-per-million ((n_oov * 1e6) DIV n_tokens) so
     the check is exact without any float rounding discipline."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(_words(F.lower("text"))).alias("token"))
+    toks = docs.select("doc_id", F.explode(_words("lower(text)")).alias("token"))
     vocab = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -756,7 +774,7 @@ def q113_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     top = (
-        docs.select(F.explode(_words(F.lower("text"))).alias("token"))
+        docs.select(F.explode(_words("lower(text)")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("token").asc())
@@ -851,7 +869,7 @@ def q144_dup_ngram_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc integer masses -> per-source rollup; both shuffles are keyed
     by doc (bounded by token count, never pairwise)."""
     docs = load(spark, sf_dir, "documents")
-    w = docs.select("doc_id", "source", _words(F.lower("text")).alias("w"))
+    w = docs.select("doc_id", "source", _words("lower(text)").alias("w"))
     # word_ngrams IS this span template -- the inline copy it replaced
     # violated the helper's own single-definition contract
     per_doc = (
@@ -991,7 +1009,7 @@ def q185_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-row term widened to decimal(38,0) before the sum (q194's
         # pattern): an int64 accumulator of ~1e9 terms overflows at ~9.2e9
         # docs, and the oracle side already sums in HUGEINT
-        ((F.sum((h60(F.col("red")) % 1_000_000_007).cast("decimal(38,0)")) % 1_000_000_007)
+        ((F.sum((h60("red") % 1_000_000_007).cast("decimal(38,0)")) % 1_000_000_007)
          .cast("bigint").alias("redacted_fp")),
     )
 
@@ -1053,7 +1071,7 @@ def q192_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram counts (map-side combined, one corpus scan), per-source totals
     on a full-frame window over the type table, one rollup."""
     docs = load(spark, sf_dir, "documents")
-    w = docs.select("source", _words(F.lower("text")).alias("w"))
+    w = docs.select("source", _words("lower(text)").alias("w"))
     bigrams = word_ngrams("w", 2)
     cnt = (
         w.select("source", F.explode(bigrams).alias("g"))

@@ -46,7 +46,7 @@ def q156_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build_chars() -> DataFrame:
         wf = (
             load(spark, sf_dir, "documents")
-            .select(F.explode(_words(F.lower("text"))).alias("w"))
+            .select(F.explode(_words("lower(text)")).alias("w"))
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("f"))
         )
@@ -310,7 +310,7 @@ def q162_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k heap; the weight total broadcasts back over NEG_V rows."""
     docs = load(spark, sf_dir, "documents")
     census = (
-        docs.select(F.explode(_words(F.lower("text"))).alias("token"))
+        docs.select(F.explode(_words("lower(text)")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -378,7 +378,7 @@ def q234_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two aggregates off the token stream (first-occurrence and
     per-decile mass), everything downstream is 10 rows."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", _words(F.lower("text")).alias("w"))
+    docs = load(spark, sf_dir, "documents").select("doc_id", _words("lower(text)").alias("w"))
     mx = docs.agg(F.max("doc_id").alias("max_id"))
     toks = docs.select("doc_id", F.explode("w").alias("tok"))
 

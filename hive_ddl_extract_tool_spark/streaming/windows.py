@@ -513,14 +513,14 @@ def q131_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     family), so the drained stream equals the batch band join and the
     oracle is exact. State: only the final per-doc dropDuplicates --
     bounded by the batch, not the corpus."""
-    from ..operators._hashing import MINHASH_SEEDS, P31, h60
+    from ..operators._hashing import MINHASH_SEEDS, P31, h60_expr
     from ..operators.dedup import (
         _band_rows,
         _doc_shingles_raw,
         _is_new,
         _minhash_wide,
-        _shingles_from_words,
-        _words,
+        _shingles_from_words_expr,
+        _words_expr,
     )
 
     name = "q131_gate_result"
@@ -529,7 +529,7 @@ def q131_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Static side: the standing index's band table (batch path, staged
     # shingle machinery). At scale this is the STORED signature table.
     idx_wide = _minhash_wide(
-        _doc_shingles_raw(spark, sf_dir).filter(~is_new(F.col("doc_id")))
+        _doc_shingles_raw(spark, sf_dir).filter(~is_new("doc_id"))
     )
     idx_bands = _band_rows(idx_wide).select("band", "ka", "kb")
 
@@ -542,17 +542,13 @@ def q131_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    stream = _table_stream(spark, sf_dir, "documents", schema).filter(
-        is_new(F.col("doc_id"))
-    )
-    sh = F.transform(_shingles_from_words(_words()), lambda s: h60(s) % F.lit(P31))
+    stream = _table_stream(spark, sf_dir, "documents", schema).filter(is_new("doc_id"))
+    sh = f"transform({_shingles_from_words_expr(_words_expr())}, s -> {h60_expr('s')} % {P31})"
     mins = [
-        F.array_min(
-            F.transform(F.col("sh"), lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(P31))
-        ).alias(f"m{i}")
+        f"array_min(transform(sh, h -> ({a} * h + {b}) % {P31})) AS m{i}"
         for i, (a, b) in enumerate(MINHASH_SEEDS)
     ]
-    sig = stream.select("doc_id", "source", sh.alias("sh")).select(
+    sig = stream.selectExpr("doc_id", "source", f"{sh} AS sh").selectExpr(
         "doc_id", "source", *mins
     )
     new_bands = _band_rows(sig, "source")
@@ -1408,7 +1404,7 @@ def _cms_batch_cells(bdf: DataFrame) -> DataFrame:
     from ..operators._hashing import MINHASH_SEEDS, minhash
     from ..operators.profiling import CMS_D, CMS_W
 
-    key = F.col("user_id").cast("string")
+    key = "CAST(user_id AS STRING)"
     arr = F.array(*[minhash(key, *MINHASH_SEEDS[i]) % CMS_W for i in range(CMS_D)])
     return (
         bdf.select(F.posexplode(arr).alias("i", "b"))
@@ -1493,7 +1489,7 @@ def q238_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_exact"))
     )
-    key = F.col("user_id").cast("string")
+    key = "CAST(user_id AS STRING)"
     out = counts.select(
         "user_id", "n_exact",
         *[(minhash(key, *MINHASH_SEEDS[i]) % CMS_W).alias(f"b{i}")

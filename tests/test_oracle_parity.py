@@ -249,7 +249,7 @@ def test_q102_selection_respects_budget(spark, sf_dir):
     from hive_ddl_extract_tool_spark.operators.text import _words
     from hive_ddl_extract_tool_spark.tables import load
 
-    docs = load(spark, sf_dir, "documents").select(F.size(_words(F.lower("text"))).alias("n"))
+    docs = load(spark, sf_dir, "documents").select(F.size(_words("lower(text)")).alias("n"))
     agg = docs.agg(F.sum("n").alias("tot"), F.max("n").alias("mx")).collect()[0]
     budget = agg["tot"] // 3
     sel = sum(r["tokens_selected"] for r in QUERIES["q102_token_budget_select"](spark, sf_dir).collect())

@@ -901,6 +901,17 @@ def test_containment_rides_staged_candidates(spark, sf_dir):
     assert "stage_doc_shingles" not in plan, f"corpus-sized shingle stage in the verify:\n{plan[:2000]}"
 
 
+def test_estimator_audit_reads_no_corpus_sized_input(spark, sf_dir):
+    """q106 folds its signatures over the candidate-only shingle stage
+    (q42_dsc): every doc of a q42 pair is a candidate doc and q42_dsc holds
+    all of its distinct shingles, so with its stages present the plan
+    reads neither the documents file nor the corpus-sized shingle stage."""
+    plan = formatted_plan(QUERIES["q106_minhash_estimator_error"](spark, sf_dir))
+    assert "q42_dsc" in plan, f"signatures not riding the candidate shingle stage:\n{plan[:2000]}"
+    assert "documents.parquet" not in plan, f"corpus scanned for signatures:\n{plan[:2000]}"
+    assert "stage_doc_shingles" not in plan, f"corpus-sized shingle stage read:\n{plan[:2000]}"
+
+
 def test_python_datasink_readback_plan(spark, sf_dir):
     """q194's RETURNED plan is the read-back aggregation: a JSON scan of
     the manifest-listed files feeding a partially-aggregated hash agg on

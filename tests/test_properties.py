@@ -83,17 +83,19 @@ def test_h60_cross_engine_parity_on_tricky_corpus():
     from hive_ddl_extract_tool_spark.operators._hashing import h60_sql
 
     con = duckdb.connect()
+    # a bare column and an expression argument: the kernel takes SQL text
     duck = [
-        con.sql("SELECT " + h60_sql("?").replace("?", "$s"), params={"s": s}).fetchone()[0]
+        con.sql(f"SELECT {h60_sql('$s')}, {h60_sql('lower($s)')}", params={"s": s}).fetchone()
         for s in TRICKY
     ]
     from hive_ddl_extract_tool_spark.operators._hashing import h60
     from hive_ddl_extract_tool_spark.session import get_spark
-    from pyspark.sql import functions as F
 
     sp = get_spark(app_name="tests", cpus=4, shuffle_partitions=4)
-    sdf = sp.createDataFrame([(s,) for s in TRICKY], "s string").select(h60("s").alias("h"))
-    spark_vals = [r["h"] for r in sdf.collect()]
+    sdf = sp.createDataFrame([(s,) for s in TRICKY], "s string").select(
+        h60("s").alias("h"), h60("lower(s)").alias("hl")
+    )
+    spark_vals = [(r["h"], r["hl"]) for r in sdf.collect()]
     assert spark_vals == duck
 
 
@@ -128,7 +130,7 @@ HOSTILE_WS_STRINGS = [
 ]
 
 
-def _duck_tokens(strings):
+def _duck_tokens(strings, fold=""):
     import duckdb
 
     from hive_ddl_extract_tool_spark.operators.text import WS
@@ -137,7 +139,7 @@ def _duck_tokens(strings):
     out = []
     for s in strings:
         row = con.execute(
-            "SELECT list_filter(regexp_split_to_array(?, ?), x -> x <> '')",
+            f"SELECT list_filter(regexp_split_to_array({fold}(?), ?), x -> x <> '')",
             [s, WS],
         ).fetchone()[0]
         out.append(list(row))
@@ -152,6 +154,9 @@ def test_tokenizer_spark_duckdb_agree_on_hostile_whitespace(spark):
     got = [r[0] for r in df.select(_words("text")).collect()]
     want = _duck_tokens(HOSTILE_WS_STRINGS)
     assert got == want
+    # an expression argument goes through the same escaped pattern literal
+    got = [r[0] for r in df.select(_words("lower(text)")).collect()]
+    assert got == _duck_tokens(HOSTILE_WS_STRINGS, fold="lower")
 
 
 def test_tokenizer_arrow_duckdb_agree_on_hostile_whitespace():
@@ -208,7 +213,7 @@ def test_tokenizer_spark_duckdb_agree_on_real_corpus(spark, sf_dir):
     got = {
         r["doc_id"]: r["w"]
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", _words(F.lower("text")).alias("w"))
+        .select("doc_id", _words("lower(text)").alias("w"))
         .collect()
     }
     con = duckdb.connect()
